@@ -68,31 +68,45 @@ def _cmd_query(args) -> int:
     return 0
 
 
+def _load_optional(spark, directory: str, name: str):
+    try:
+        return _load_table(spark, directory, name)
+    except FileNotFoundError:
+        return None
+
+
+_ERP_TABLES = (
+    "reg_config", "faculty", "students", "courses", "sections", "enrollments",
+)
+
+
 def _cmd_sync(args) -> int:
+    from .concurrency import run_legs
     from .pipeline.engine import SyncEngine
+    from .pipeline.mirror import MIRROR_ENTITIES
     from .pipeline.runner import csv_sink
     from .session import get_spark
 
     spark = get_spark(app_name="sync")
-    erp = {
-        name: _load_table(spark, args.erp, name)
-        for name in (
-            "reg_config", "faculty", "students", "courses",
-            "sections", "enrollments",
-        )
+    # Each load runs its own schema-inference job; the loads are
+    # independent, so they overlap as legs of one run_legs call. A
+    # missing ERP table still raises; a missing raw report is skipped.
+    raw_entities = MIRROR_ENTITIES if args.raw else ()
+    frames = run_legs(
+        *(lambda n=n: _load_table(spark, args.erp, n) for n in _ERP_TABLES),
+        *(lambda e=e: _load_optional(spark, args.raw, e) for e in raw_entities),
+    )
+    erp = dict(zip(_ERP_TABLES, frames))
+    raw = {
+        e: df
+        for e, df in zip(raw_entities, frames[len(_ERP_TABLES):])
+        if df is not None
     }
     engine = SyncEngine(
         spark, erp, args.mirror, term=args.term, dq_gate=not args.no_dq_gate
     )
-    if args.raw:
-        raw = {}
-        for entity in ("users", "courses", "sections", "enrollments"):
-            try:
-                raw[entity] = _load_table(spark, args.raw, entity)
-            except FileNotFoundError:
-                pass
-        if raw:
-            engine.update_mirror_tables(raw)
+    if raw:
+        engine.update_mirror_tables(raw)
 
     if args.sink == "csv":
         sink = csv_sink(args.out)

@@ -25,11 +25,10 @@ def test_cli_unknown_query_errors():
     assert main(["query", "no_such_query"]) == 2
 
 
-def test_cli_sync_end_to_end(spark, tmp_path):
-    """ERP parquet dir + raw reports dir -> mirrors -> updates under
-    OUT -> report printed; asserts sink files exist with rows."""
+def _write_sync_inputs(spark, tmp_path):
+    """The ERP tables and raw reports of one small night, as parquet
+    under ``tmp_path/erp`` and ``tmp_path/raw``; returns both dirs."""
     erp_dir, raw_dir = tmp_path / "erp", tmp_path / "raw"
-    mirror_dir, out_dir = tmp_path / "mirror", tmp_path / "out"
     for d in (erp_dir, raw_dir):
         os.makedirs(d)
 
@@ -81,7 +80,11 @@ def test_cli_sync_end_to_end(spark, tmp_path):
         spark.createDataFrame(rows, schema).write.parquet(
             str(raw_dir / f"{name}.parquet")
         )
+    return erp_dir, raw_dir
 
+
+def _run_sync(erp_dir, raw_dir, mirror_dir, out_dir) -> str:
+    """Run the ``sync`` command with a CSV sink; returns what it printed."""
     buf = io.StringIO()
     with redirect_stdout(buf):
         rc = main(
@@ -95,7 +98,15 @@ def test_cli_sync_end_to_end(spark, tmp_path):
             ]
         )
     assert rc == 0
-    out = buf.getvalue()
+    return buf.getvalue()
+
+
+def test_cli_sync_end_to_end(spark, tmp_path):
+    """ERP parquet dir + raw reports dir -> mirrors -> updates under
+    OUT -> report printed; asserts sink files exist with rows."""
+    erp_dir, raw_dir = _write_sync_inputs(spark, tmp_path)
+    out_dir = tmp_path / "out"
+    out = _run_sync(erp_dir, raw_dir, tmp_path / "mirror", out_dir)
     assert "student_users" in out  # report printed
     # the adds computed by the diff landed in the CSV sink
     import glob
@@ -104,6 +115,76 @@ def test_cli_sync_end_to_end(spark, tmp_path):
     assert files
     body = open(files[0]).read()
     assert "1002" in body  # stu.b is the missing student user
+
+
+def test_cli_sync_missing_inputs(spark, tmp_path):
+    """A missing raw report skips that entity's mirror refresh, so its
+    previous snapshot stays; a missing ERP table still fails the run
+    with FileNotFoundError."""
+    import shutil
+
+    import pytest
+
+    erp_dir, raw_dir = _write_sync_inputs(spark, tmp_path)
+    mirror_dir = tmp_path / "mirror"
+    users_mirror = mirror_dir / "rpc_re_canvas_users"
+
+    def listing():
+        return sorted(
+            (str(p), p.stat().st_mtime_ns) for p in users_mirror.rglob("*")
+        )
+
+    _run_sync(erp_dir, raw_dir, mirror_dir, tmp_path / "out")
+    before = listing()
+    assert before
+    shutil.rmtree(raw_dir / "users.parquet")
+    _run_sync(erp_dir, raw_dir, mirror_dir, tmp_path / "out")
+    assert listing() == before
+
+    shutil.rmtree(erp_dir / "faculty.parquet")
+    with pytest.raises(FileNotFoundError, match="faculty"):
+        _run_sync(erp_dir, raw_dir, mirror_dir, tmp_path / "out2")
+
+
+def test_cli_sync_overlap_matches_serial(
+    spark, tmp_path, monkeypatch, serial_executor
+):
+    """The overlapped night (loads, DQ gates, mirror writes and mirror
+    reads as run_legs legs) writes the same seven CSVs and four mirrors
+    and prints the same report as the same legs run inline."""
+    import concurrent.futures as cf
+    import glob
+
+    from lms_erp_data_integration_spark.pipeline.mirror import (
+        MIRROR_ENTITIES,
+        read_mirror,
+    )
+    from lms_erp_data_integration_spark.pipeline.runner import UPDATE_ORDER
+
+    erp_dir, raw_dir = _write_sync_inputs(spark, tmp_path)
+
+    def night(arm):
+        mirror_dir, out_dir = tmp_path / arm / "mirror", tmp_path / arm / "out"
+        report = _run_sync(erp_dir, raw_dir, mirror_dir, out_dir)
+        csvs = {}
+        for name in UPDATE_ORDER:
+            (path,) = glob.glob(str(out_dir / name / "*.csv"))
+            with open(path) as f:
+                header, *rows = f.read().splitlines()
+            csvs[name] = (header, sorted(rows))
+        mirrors = {
+            e: sorted(map(tuple, read_mirror(spark, e, str(mirror_dir)).collect()))
+            for e in MIRROR_ENTITIES
+        }
+        return csvs, mirrors, report
+
+    threaded = night("threaded")
+    monkeypatch.setattr(cf, "ThreadPoolExecutor", serial_executor)
+    serial = night("serial")
+    assert threaded == serial
+    csvs, mirrors, _ = threaded
+    assert csvs["student_users"][1]  # the diff found the missing student
+    assert all(mirrors.values())  # every mirror was written
 
 
 def test_cli_query_json_output(spark, capsys):

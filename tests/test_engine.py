@@ -190,6 +190,77 @@ def test_dq_gate_blocks_poisoned_mirror(spark, tmp_path):
     assert eng.mirror("users").count() == 1
 
 
+def test_dq_gate_is_all_or_nothing_across_entities(spark, tmp_path):
+    """Every entity's gate runs before any mirror is written: a refresh
+    whose courses, sections and enrollments are valid but whose users
+    report has a duplicated id leaves all four mirrors on the earlier
+    snapshot, not only the users mirror."""
+    from lms_erp_data_integration_spark.operators.dq import DQGateError
+    from lms_erp_data_integration_spark.pipeline.mirror import (
+        MIRROR_ENTITIES,
+        read_mirror,
+    )
+
+    erp = {
+        "reg_config": spark.createDataFrame(
+            [("21 ", "1S ")], "CUR_YR_DFLT string, CUR_TRM_DFLT string"
+        )
+    }
+    mirror = str(tmp_path / "mirror")
+    eng = SyncEngine(spark, erp, mirror, term="current")
+
+    users_schema = "user_id string, canvas_user_id long, login_id string"
+    courses_schema = "canvas_course_id long, course_id string, status string"
+    sections_schema = (
+        "course_id string, section_id string, name string, status string,"
+        " account_id long, canvas_section_id long, created_by_sis boolean"
+    )
+    enrollments_schema = (
+        "course_id string, user_id string, role string, section_id string,"
+        " status string, canvas_enrollment_id long, canvas_section_id long,"
+        " created_by_sis boolean"
+    )
+
+    def reports(users, courses, sections, enrollments):
+        # users last: a gate run per entity just before its write would
+        # already have overwritten the other three when users trips
+        return {
+            "courses": spark.createDataFrame(courses, courses_schema),
+            "sections": spark.createDataFrame(sections, sections_schema),
+            "enrollments": spark.createDataFrame(
+                enrollments, enrollments_schema
+            ),
+            "users": spark.createDataFrame(users, users_schema),
+        }
+
+    def snapshot():
+        return {
+            e: sorted(map(tuple, read_mirror(spark, e, mirror).collect()))
+            for e in MIRROR_ENTITIES
+        }
+
+    eng.update_mirror_tables(reports(
+        [("1001", 11, "stu.a")],
+        [(21, "MATH101", "active")],
+        [("MATH101", "S1", "Morning", "active", 1, 31, True)],
+        [("MATH101", "1001", "student", "S1", "active", 41, 31, True)],
+    ))
+    before = snapshot()
+    assert all(before.values())
+
+    poisoned = reports(
+        [("1002", 21, "stu.b"), ("1002", 22, "stu.b.dup")],  # duplicate id
+        [(22, "CS200", "active")],
+        [("CS200", "S2", "Lab", "active", 1, 32, True)],
+        [("CS200", "1002", "student", "S2", "active", 42, 32, True)],
+    )
+    with pytest.raises(DQGateError) as ei:
+        eng.update_mirror_tables(poisoned)
+    assert ei.value.label == "users"
+    assert any(n == "id_num_unique" for n, _ in ei.value.failed)
+    assert snapshot() == before
+
+
 def test_dq_report_unit(spark):
     """dq_report over a constructed frame: one row per check, exact
     violation counts, FK orphans via anti-join."""

@@ -25,44 +25,16 @@ import lms_erp_data_integration_spark.plans as plans
 from lms_erp_data_integration_spark.caching import release_cached
 
 
-class _SerialFuture:
-    def __init__(self, fn, *a, **kw):
-        try:
-            self._res, self._exc = fn(*a, **kw), None
-        except BaseException as e:  # noqa: BLE001
-            self._res, self._exc = None, e
-
-    def result(self):
-        if self._exc is not None:
-            raise self._exc
-        return self._res
-
-
-class _SerialExecutor:
-    def __init__(self, *a, **kw):
-        pass
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        return False
-
-    def submit(self, fn, *a, **kw):
-        return _SerialFuture(fn, *a, **kw)
-
-    def map(self, fn, *iterables):
-        return list(map(fn, *iterables))
-
-
 @pytest.mark.parametrize(
     "name", ["sync_pipeline_run_report", "stream_sim_ivf_search"]
 )
-def test_threaded_legs_match_serial_rows(spark, sf_dir, name, monkeypatch):
+def test_threaded_legs_match_serial_rows(
+    spark, sf_dir, name, monkeypatch, serial_executor
+):
     fn = plans.QUERIES[name]
     threaded = sorted(map(tuple, fn(spark, sf_dir).collect()))
     release_cached()
-    monkeypatch.setattr(cf, "ThreadPoolExecutor", _SerialExecutor)
+    monkeypatch.setattr(cf, "ThreadPoolExecutor", serial_executor)
     serial = sorted(map(tuple, fn(spark, sf_dir).collect()))
     release_cached()
     assert threaded == serial

@@ -554,15 +554,15 @@ BROADCAST_SITES = {
         "k-row: fixture query vectors (constant count)",
     ("plans/similarity_queries.py", "emb_label_drift", "gsum"):
         "enum-bounded: per-dimension totals (embedding dim index)",
-    ("plans/similarity_queries.py", "nprobe_curve_frame", "c"):
+    ("plans/similarity_queries.py", "_nprobe_curve_and_candidates", "c"):
         "k-row: IVF centroids (k constant)",
-    ("plans/similarity_queries.py", "nprobe_curve_frame", "qc"):
+    ("plans/similarity_queries.py", "_nprobe_curve_and_candidates", "qc"):
         "k-row: query x centroid distances (constants)",
-    ("plans/similarity_queries.py", "nprobe_curve_frame", "nq"):
+    ("plans/similarity_queries.py", "_nprobe_curve_and_candidates", "nq"):
         "scalar-agg: 1-row query count",
-    ("plans/similarity_queries.py", "nprobe_curve_frame", "hits"):
+    ("plans/similarity_queries.py", "_nprobe_curve_and_candidates", "hits"):
         "k-row: one row per nprobe sweep point",
-    ("plans/similarity_queries.py", "nprobe_curve_frame", "scan"):
+    ("plans/similarity_queries.py", "_nprobe_curve_and_candidates", "scan"):
         "k-row: one row per nprobe sweep point",
     # --- plans/sketch_queries.py
     ("plans/sketch_queries.py", "theta_setops",
