@@ -66,6 +66,10 @@ def main() -> int:
     warmup_sec = round(time.perf_counter() - t0, 3)
     release_cached()
 
+    # query -> "<ExceptionClass>: <first message line>" of its first
+    # failed run, so a -1.0 timing keeps its reason
+    errors: dict[str, str] = {}
+
     def timed_run(fn, name: str = "") -> float:
         # label the jobs (guide §1.5) so a UI/event-log capture of a
         # bench run maps stages back to queries; thread-local, cleared
@@ -75,8 +79,10 @@ def main() -> int:
         try:
             force(fn(spark, sf_dir))
             dt = round(time.perf_counter() - t0, 4)
-        except Exception:  # noqa: BLE001
+        except Exception as e:  # noqa: BLE001
             dt = -1.0
+            first = str(e).strip().splitlines()[:1]
+            errors.setdefault(name, ": ".join([type(e).__name__, *first]))
         spark.sparkContext.setJobDescription(None)
         # unpersist the query's tracked intermediates (timed: cache
         # lifecycle is part of the query's real cost)
@@ -182,6 +188,7 @@ def main() -> int:
                 "n_retimed": retimed,
                 "noise_flagged": noise_flagged,
                 "ref_flagged": ref_flagged,
+                "errors": errors,
                 "queries": timings,
             },
             f,
@@ -220,6 +227,7 @@ def main() -> int:
                 "timing": "min3sweeps",
                 "n_noise_flagged": len(noise_flagged),
                 "n_ref_flagged": len(ref_flagged),
+                "n_errors": len(errors),
                 "detail": "bench_full.json",
                 "queries": qs,
             },

@@ -15,16 +15,21 @@ Lifecycle parity (SURVEY.md section 3):
 - E3 diff & apply: the seven update queries as broadcast anti-joins
   over ERP truth vs mirrors (``src/jenzabar.py:50-80``), applied in FK
   order with an engine-side run report (``src/canvas.py:107-162``).
-  The four mirror reads overlap; the apply stays strictly sequential
-  in FK order.
+  The four mirror reads overlap. ``run`` then materializes the five
+  diffs once and concurrently, each checkpoint job observing its
+  change counts; the two CTL updates are projections of the
+  materialized courses and sections. The apply stays strictly
+  sequential in FK order, and the report is built from the observed
+  counts without running a Spark job.
 
 Overlapped legs run on the shared ``concurrency.run_legs`` pool. A
 night's Spark jobs are small, so their cost is mostly fixed driver
 and scheduler latency; independent legs pay it once instead of once
 each.
 
-Differences by design: no CSV dataflow between stages (lazy DataFrames
-end-to-end), statistics computed *before* apply, and every per-term
+Differences by design: no CSV dataflow between stages (DataFrames
+end-to-end; the diffs are checkpointed in executor memory, not written
+out), statistics computed *before* apply, and every per-term
 read hits a ``yr_cde/trm_cde`` partition (pruning at 100 TB).
 """
 
@@ -39,7 +44,7 @@ from ..operators.cleaning import ENTITY_SPECS, clean
 from ..operators.diff import missing_rows, snapshot_diff
 from ..runparams import RunParams
 from .mirror import MIRROR_ENTITIES, read_mirror, write_mirror
-from .runner import Sink, SyncPipeline, run_report
+from .runner import Sink, SyncPipeline, change_counts, observed_report
 
 # Mirror admission expectations (r4 verdict #8): the invariants the
 # cleaning specs are SUPPOSED to guarantee, re-checked fail-closed at
@@ -87,6 +92,35 @@ def convert_term_id(canvas_terms: DataFrame, sis_term_id: str) -> int | None:
         .first()
     )
     return None if row is None else row["id"]
+
+
+# CTL library update -> the diff it projects, 1:1 with ``status`` kept
+_CTL_SOURCES = {
+    "ctl_library_courses": "courses",
+    "ctl_library_sections": "sections",
+}
+
+
+def _with_ctl_updates(diffs: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """The five diffs plus the two CTL library updates projected from
+    its ``courses`` and ``sections``."""
+    courses, sections = diffs["courses"], diffs["sections"]
+    return {
+        **diffs,
+        "ctl_library_courses": courses.select(
+            F.concat(F.lit("CTL-"), F.col("course_id")).alias("course_id"),
+            F.col("short_name"),
+            F.concat(F.lit("CTL Library "), F.col("long_name")).alias("long_name"),
+            "term_id",
+            "status",
+        ),
+        "ctl_library_sections": sections.select(
+            F.concat(F.lit("CTL-"), F.col("section_id")).alias("section_id"),
+            F.concat(F.lit("CTL-"), F.col("course_id")).alias("course_id"),
+            "name",
+            "status",
+        ),
+    }
 
 
 class SyncEngine:
@@ -156,7 +190,9 @@ class SyncEngine:
     # ------------------------------------------------------------- E3
     def build_updates(self) -> dict[str, DataFrame]:
         """The seven update DataFrames (SURVEY.md section 2.4),
-        projected to Canvas SIS-import shapes (FIXTURES.md section D)."""
+        projected to Canvas SIS-import shapes (FIXTURES.md section D):
+        five diffs of ERP truth against the mirrors, and the two CTL
+        updates projected from two of them (:func:`_with_ctl_updates`)."""
         from ..concurrency import run_legs
 
         p = self.params
@@ -215,32 +251,44 @@ class SyncEngine:
         )
         enrollments = snapshot_diff(erp_enr, mirror_enr, enr_keys)
 
-        ctl_courses = courses.select(
-            F.concat(F.lit("CTL-"), F.col("course_id")).alias("course_id"),
-            F.col("short_name"),
-            F.concat(F.lit("CTL Library "), F.col("long_name")).alias("long_name"),
-            "term_id",
-            "status",
-        )
-        ctl_sections = sections.select(
-            F.concat(F.lit("CTL-"), F.col("section_id")).alias("section_id"),
-            F.concat(F.lit("CTL-"), F.col("course_id")).alias("course_id"),
-            "name",
-            "status",
-        )
-
-        return {
+        return _with_ctl_updates({
             "faculty_users": missing_users(self.erp["faculty"]),
             "student_users": missing_users(self.erp["students"]),
             "courses": courses,
             "sections": sections,
             "enrollments": enrollments,
-            "ctl_library_courses": ctl_courses,
-            "ctl_library_sections": ctl_sections,
-        }
+        })
 
     def run(self, sink: Sink) -> DataFrame:
-        """Build updates, apply them in FK order, return the report."""
-        updates = self.build_updates()
-        SyncPipeline(sink).apply(updates)
-        return run_report(updates)
+        """Materialize the five diffs, apply the seven updates in FK
+        order, and return the report built from the observed counts.
+
+        Each diff is computed once, by one ``localCheckpoint`` job that
+        also observes its :func:`~.runner.change_counts`; the five jobs
+        overlap as legs of one ``run_legs`` call. The CTL updates are
+        1:1 projections of the checkpointed courses and sections that
+        keep ``status``, so they reuse those counts. The sinks then
+        read computed rows instead of re-running the anti-joins, and
+        the report, with :func:`~.runner.run_report`'s rows and types,
+        needs no Spark job."""
+        from pyspark.sql import Observation
+
+        from ..concurrency import run_legs
+
+        diffs = {
+            name: df
+            for name, df in self.build_updates().items()
+            if name not in _CTL_SOURCES
+        }
+        observations = {name: Observation(f"sync_{name}") for name in diffs}
+        frames = run_legs(*(
+            lambda df=df, obs=observations[name]: df.observe(
+                obs, *change_counts(df)
+            ).localCheckpoint(eager=True)
+            for name, df in diffs.items()
+        ))
+        SyncPipeline(sink).apply(_with_ctl_updates(dict(zip(diffs, frames))))
+        counts = {name: obs.get for name, obs in observations.items()}
+        for ctl, source in _CTL_SOURCES.items():
+            counts[ctl] = counts[source]
+        return observed_report(self.spark, counts)

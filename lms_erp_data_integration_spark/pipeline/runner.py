@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Mapping, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # FK-dependency order (src/canvas.py:108-116)
@@ -45,6 +45,21 @@ ENTITY_KIND: dict[str, str] = {
 
 Sink = Callable[[str, DataFrame], None]
 
+_COUNT_COLUMNS = ("n_rows", "n_active", "n_deleted")
+
+
+def change_counts(df: DataFrame) -> list[Column]:
+    """The change-count aggregates of one update: ``n_rows`` and, by
+    ``status`` (``active`` when the frame has no status column),
+    ``n_active`` and ``n_deleted``. Usable in ``agg`` and ``observe``
+    alike; the sums are NULL over an empty update, as in SQL."""
+    status = F.col("status") if "status" in df.columns else F.lit("active")
+    return [
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.when(status == "active", 1).otherwise(0)).alias("n_active"),
+        F.sum(F.when(status == "deleted", 1).otherwise(0)).alias("n_deleted"),
+    ]
+
 
 def run_report(updates: Mapping[str, DataFrame]) -> DataFrame:
     """Per-entity change statistics as a small DataFrame
@@ -52,29 +67,46 @@ def run_report(updates: Mapping[str, DataFrame]) -> DataFrame:
 
     Columns: entity, kind, n_rows, n_active, n_deleted.
     """
-    parts = []
-    for name in UPDATE_ORDER:
-        if name not in updates:
-            continue
-        df = updates[name]
-        status = (
-            F.col("status") if "status" in df.columns else F.lit("active")
+    parts = [
+        updates[name].agg(
+            F.lit(name).alias("entity"),
+            F.lit(ENTITY_KIND.get(name, "Unknown")).alias("kind"),
+            *change_counts(updates[name]),
         )
-        parts.append(
-            df.agg(
-                F.lit(name).alias("entity"),
-                F.lit(ENTITY_KIND.get(name, "Unknown")).alias("kind"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.when(status == "active", 1).otherwise(0)).alias("n_active"),
-                F.sum(F.when(status == "deleted", 1).otherwise(0)).alias("n_deleted"),
-            )
-        )
+        for name in UPDATE_ORDER
+        if name in updates
+    ]
     if not parts:
         raise ValueError("no updates supplied")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def observed_report(
+    spark: SparkSession, counts: Mapping[str, Mapping[str, int | None]]
+) -> DataFrame:
+    """The :func:`run_report` rows, columns and types built from
+    already observed :func:`change_counts` values, as a local
+    ``VALUES`` relation: showing or collecting it runs no Spark job."""
+
+    def bigint(v: int | None) -> str:
+        return "CAST(NULL AS BIGINT)" if v is None else f"CAST({int(v)} AS BIGINT)"
+
+    rows = [
+        f"('{name}', '{ENTITY_KIND.get(name, 'Unknown')}', "
+        + ", ".join(bigint(counts[name][c]) for c in _COUNT_COLUMNS)
+        + ")"
+        for name in UPDATE_ORDER
+        if name in counts
+    ]
+    if not rows:
+        raise ValueError("no updates supplied")
+    return spark.sql(
+        "SELECT * FROM VALUES " + ", ".join(rows)
+        + " AS report(entity, kind, " + ", ".join(_COUNT_COLUMNS) + ")"
+    )
 
 
 class SyncPipeline:
@@ -85,17 +117,30 @@ class SyncPipeline:
     (tests use a recording sink; a CSV sink gives file parity).
 
     With ``observe=True``, each update is instrumented with a Spark
-    ``Observation`` so the change counts piggyback on the sink's own
-    action — unlike :func:`run_report`, which costs one extra
-    aggregation pass per entity. At 100 TB that difference is a full
-    re-scan of every update. At sync-night size they are not free:
-    ``observe=True`` plus a ``createDataFrame`` report measured no
-    faster than ``run_report`` over 12 alternating nights of the
-    ``sync_nightly`` benchmark, seed 31 (apply 1.41 -> 1.63 s, report
-    0.52 vs 0.67 s, night 4.76 vs 4.78 s), so ``SyncEngine.run``
-    keeps ``run_report``. Metrics land in ``self.observed`` after ``apply``
-    (requires each sink call to run exactly the kind of action a
-    write is)."""
+    ``Observation`` of :func:`change_counts`, so the counts piggyback
+    on the sink's own action instead of the extra aggregation pass per
+    entity that :func:`run_report` costs. Metrics land in
+    ``self.observed`` after ``apply`` (requires each sink call to run
+    exactly the kind of action a write is).
+
+    ``SyncEngine.run`` does not use it: the same observation rides the
+    job that materializes each diff before the apply, and the sink
+    path here is unchanged. Alternatives measured on the
+    ``sync_nightly`` benchmark (4 cores) and rejected:
+
+    - ``observe=True`` over the lazy diffs plus a ``createDataFrame``
+      report: no faster than ``run_report`` over 12 alternating
+      nights, seed 31 (apply 1.41 -> 1.63 s, report 0.52 vs 0.67 s,
+      night 4.76 vs 4.78 s).
+    - ``tracked_persist`` plus a noop write instead of
+      ``localCheckpoint``: median night 3.09, 3.08 and 4.24 s against
+      2.80, 2.63 and 2.75 s (3 interleaved runs of 8 measured nights,
+      seeds 61-63). Its cached blocks also stay until
+      ``release_cached()``, which the CLI never calls.
+    - Checkpointing alone, with the report still ``run_report`` over
+      the checkpoints: median night 3.14 -> 2.92 s against the lazy
+      diffs, winning only 2 of 5 interleaved pairs (seeds 41-45). The
+      report from the observed counts is part of the gain."""
 
     def __init__(
         self,
@@ -125,22 +170,8 @@ class SyncPipeline:
             if name in updates:
                 df = updates[name]
                 if self.observe:
-                    status = (
-                        F.col("status")
-                        if "status" in df.columns
-                        else F.lit("active")
-                    )
                     obs = Observation(f"sync_{name}")
-                    df = df.observe(
-                        obs,
-                        F.count(F.lit(1)).alias("n_rows"),
-                        F.sum(F.when(status == "active", 1).otherwise(0)).alias(
-                            "n_active"
-                        ),
-                        F.sum(F.when(status == "deleted", 1).otherwise(0)).alias(
-                            "n_deleted"
-                        ),
-                    )
+                    df = df.observe(obs, *change_counts(df))
                     observations[name] = obs
                 self.sink(name, df)
                 applied.append(name)

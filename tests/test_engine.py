@@ -146,6 +146,64 @@ def test_updates_and_fk_ordered_run(engine):
     assert rows["enrollments"]["n_deleted"] == 1
 
 
+def test_run_applies_materialized_diffs_in_fk_order(engine):
+    """run computes every diff before the apply: the sink receives the
+    seven updates in FK order as frames whose optimized plans read
+    checkpointed rows, with no anti-join left to re-run."""
+    from lms_erp_data_integration_spark.pipeline.runner import UPDATE_ORDER
+
+    seen: list[tuple[str, str]] = []
+
+    def sink(name, df):
+        seen.append((name, df._jdf.queryExecution().optimizedPlan().toString()))
+
+    engine.run(sink)
+    assert [name for name, _ in seen] == list(UPDATE_ORDER)
+    for name, plan in seen:
+        assert "Join" not in plan, (name, plan)
+
+
+def _report_rows(df):
+    return df.schema.simpleString(), [tuple(r) for r in df.collect()]
+
+
+def test_run_report_from_observed_counts(engine, spark):
+    """run's report has run_report's rows, names and types, and
+    showing it runs no Spark job: it is built from the counts the
+    materialization observed."""
+    from lms_erp_data_integration_spark.pipeline.runner import run_report
+
+    report = engine.run(lambda name, df: None)
+    sc = spark.sparkContext
+    sc.setJobGroup("sync-report-probe", "collect the observed report")
+    try:
+        got = _report_rows(report)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("sync-report-probe") == []
+    assert got == _report_rows(run_report(engine.build_updates()))
+
+
+def test_run_report_on_an_empty_update(engine, spark):
+    """A night with no missing faculty: the empty update reports
+    n_rows 0 and NULL n_active/n_deleted, exactly as run_report's
+    aggregates over an empty frame do."""
+    from lms_erp_data_integration_spark.pipeline.runner import run_report
+
+    erp = dict(engine.erp)
+    erp["faculty"] = erp["faculty"].where(F.col("id_num") == 2001)
+    quiet = SyncEngine(
+        spark,
+        erp,
+        engine.mirror_path,
+        term="current",
+        run_date=dt.date(2021, 9, 1),
+    )
+    got = _report_rows(quiet.run(lambda name, df: None))
+    assert got == _report_rows(run_report(quiet.build_updates()))
+    assert got[1][0][:5] == ("faculty_users", "Account", 0, None, None)
+
+
 def test_mirror_cleaning_contracts(engine):
     users = engine.mirror("users")
     # sdemo row filtered by the cleaning spec (canvas.py:70)
