@@ -20,6 +20,7 @@ regression signal, not tenancy noise.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
@@ -28,7 +29,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from lms_erp_data_integration_spark.caching import release_cached  # noqa: E402
 from lms_erp_data_integration_spark.session import get_spark  # noqa: E402
+
+
+WARM_QUERY = "sync_missing_faculty_users"
 
 
 def force(df) -> None:
@@ -40,54 +45,9 @@ def main() -> int:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="bench")
     qs = entry_mod.queries()
-    # JVM/session warm-up + parquet footer reads so the first timed
-    # query doesn't absorb one-time session costs
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from lms_erp_data_integration_spark.catalog import Catalog
-
-    cat = Catalog(spark, sf_dir)
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        cat.table(t).schema  # footer read only
-    from lms_erp_data_integration_spark.caching import release_cached
-
-    # One full query as warm-up, NOT counted in totals: the first query
-    # of a session pays 3-7 s of whole-stage-codegen JIT that its twin
-    # queries don't (r4: sync_missing_faculty_users 3.0 s vs its
-    # identical-shape twin's 0.8 s). Recorded separately as warmup_sec
-    # so round-over-round per-query comparison stops whipsawing on
-    # which query ran first.
-    warm_name = "sync_missing_faculty_users"
-    t0 = time.perf_counter()
-    try:
-        force(qs[warm_name](spark, sf_dir))
-    except Exception:  # noqa: BLE001
-        pass
-    warmup_sec = round(time.perf_counter() - t0, 3)
-    release_cached()
-
-    # query -> "<ExceptionClass>: <first message line>" of its first
-    # failed run, so a -1.0 timing keeps its reason
+    warmup_sec = warm_up(spark, sf_dir, qs)
     errors: dict[str, str] = {}
-
-    def timed_run(fn, name: str = "") -> float:
-        # label the jobs (guide §1.5) so a UI/event-log capture of a
-        # bench run maps stages back to queries; thread-local, cleared
-        # after the run
-        spark.sparkContext.setJobDescription(f"bench: {name}" if name else None)
-        t0 = time.perf_counter()
-        try:
-            force(fn(spark, sf_dir))
-            dt = round(time.perf_counter() - t0, 4)
-        except Exception as e:  # noqa: BLE001
-            dt = -1.0
-            first = str(e).strip().splitlines()[:1]
-            errors.setdefault(name, ": ".join([type(e).__name__, *first]))
-        spark.sparkContext.setJobDescription(None)
-        # unpersist the query's tracked intermediates (timed: cache
-        # lifecycle is part of the query's real cost)
-        release_cached()
-        return dt
+    run = functools.partial(timed_run, spark, sf_dir, errors)
 
     # Deterministic alphabetical run order (registry order shifts as
     # the PRIORITY window rotates, which made per-query numbers
@@ -98,9 +58,9 @@ def main() -> int:
     # min. Queries under 0.1 s in sweep 1 skip sweep 2 (noise there
     # cannot move the verdict; skipping keeps added wall cost low).
     names = sorted(qs)
-    sweep1 = {n: timed_run(qs[n], n) for n in names}
+    sweep1 = {n: run(qs[n], n) for n in names}
     sweep2 = {
-        n: timed_run(qs[n], n) for n in names if sweep1[n] < 0 or sweep1[n] >= 0.1
+        n: run(qs[n], n) for n in names if sweep1[n] < 0 or sweep1[n] >= 0.1
     }
     samples = {
         n: [
@@ -123,7 +83,7 @@ def main() -> int:
         and max(samples[n]) > 3 * min(samples[n])
     ]
     for n in disagree:
-        t = timed_run(qs[n], n)
+        t = run(qs[n], n)
         if t >= 0:
             samples[n].append(t)
     timings: dict[str, float] = {}
@@ -161,7 +121,7 @@ def main() -> int:
         if not (r and r > 0 and timings[n] > 3 * r and timings[n] >= 0.5):
             continue
         for _ in range(2):
-            t = timed_run(qs[n], n)
+            t = run(qs[n], n)
             if t >= 0 and t < timings[n]:
                 timings[n] = t
             if timings[n] <= 3 * r:
@@ -182,7 +142,7 @@ def main() -> int:
                 "sf": sf_val,
                 "total_sec": total,
                 "warmup_sec": warmup_sec,
-                "warmup_query": warm_name,
+                "warmup_query": WARM_QUERY,
                 "run_order": "sorted",
                 "timing": "min_across_3_sweeps_plus_ref_adjudication",
                 "n_retimed": retimed,
@@ -267,6 +227,60 @@ def main() -> int:
     time.sleep(1.5)
     print(line, flush=True)
     return 0
+
+
+
+def warm_up(spark, sf_dir: str, qs: dict) -> float:
+    """Warm the session up; returns the seconds of the one uncounted
+    warm-up query."""
+    # JVM/session warm-up + parquet footer reads so the first timed
+    # query doesn't absorb one-time session costs
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    from lms_erp_data_integration_spark.catalog import Catalog
+
+    cat = Catalog(spark, sf_dir)
+    for t in ("region", "nation", "customer", "supplier", "part",
+              "orders", "lineitem", "events", "documents", "embeddings"):
+        cat.table(t).schema  # footer read only
+    # One full query as warm-up, NOT counted in totals: the first query
+    # of a session pays 3-7 s of whole-stage-codegen JIT that its twin
+    # queries don't (r4: sync_missing_faculty_users 3.0 s vs its
+    # identical-shape twin's 0.8 s). Recorded separately as warmup_sec
+    # so round-over-round per-query comparison stops whipsawing on
+    # which query ran first.
+    t0 = time.perf_counter()
+    try:
+        force(qs[WARM_QUERY](spark, sf_dir))
+    except Exception:  # noqa: BLE001
+        pass
+    warmup_sec = round(time.perf_counter() - t0, 3)
+    release_cached()
+    return warmup_sec
+
+
+def timed_run(spark, sf_dir: str, errors: dict[str, str], fn,
+              name: str = "") -> float:
+    """Seconds to build and force ``fn(spark, sf_dir)``, or -1.0 when it
+    raises; ``errors`` then keeps "<ExceptionClass>: <first message
+    line>" of the name's first failure, so a -1.0 timing keeps its
+    reason."""
+    # label the jobs (guide §1.5) so a UI/event-log capture of a
+    # bench run maps stages back to queries; thread-local, cleared
+    # after the run
+    spark.sparkContext.setJobDescription(f"bench: {name}" if name else None)
+    t0 = time.perf_counter()
+    try:
+        force(fn(spark, sf_dir))
+        dt = round(time.perf_counter() - t0, 4)
+    except Exception as e:  # noqa: BLE001
+        dt = -1.0
+        first = str(e).strip().splitlines()[:1]
+        errors.setdefault(name, ": ".join([type(e).__name__, *first]))
+    spark.sparkContext.setJobDescription(None)
+    # unpersist the query's tracked intermediates (timed: cache
+    # lifecycle is part of the query's real cost)
+    release_cached()
+    return dt
 
 
 if __name__ == "__main__":

@@ -10,10 +10,13 @@ Two r14-ADVICE hardenings over the plain per-call ThreadPoolExecutor
 the r14 code used:
 
 - every submitted callable is wrapped in ``pyspark.util
-  .inheritable_thread_target`` so, under the default pinned-thread
-  mode, the caller's JVM thread-local properties (job group/tags,
-  scheduler pool, job description) are inherited by the worker
-  thread — a leg's jobs are labeled like its caller's.
+  .inheritable_thread_target`` with the caller's session, so, under
+  the default pinned-thread mode, the caller's JVM thread-local
+  properties (job group, scheduler pool, job description) and session
+  tags are inherited by the worker thread — a leg's jobs are labeled
+  like its caller's. The executing thread's tags are put back after
+  each leg, so a reused pool thread carries no stale tag into a later
+  call.
 - ONE module-level pool is reused across invocations instead of a
   fresh pool (and fresh paired JVM threads) per query call, so a long
   bench session cannot accumulate JVM-side threads; the pool is
@@ -21,16 +24,17 @@ the r14 code used:
   §2.6) and its threads live for the process.
 
 The pool class is looked up through ``concurrent.futures`` at call
-time, and a pool built from a patched class is NOT cached — the
-overlap-neutrality tests and A/B harness monkeypatch
-``concurrent.futures.ThreadPoolExecutor`` with a serial inline
-executor to pin that threaded and sequential execution produce
+time, and a pool built from a patched class is NOT cached.
+:func:`serial_legs` swaps in the one serial inline executor; the
+overlap-neutrality tests and the ``serial`` arm of ``scripts/ab.py``
+use it to pin that threaded and sequential execution produce
 bit-identical rows.
 """
 
 from __future__ import annotations
 
 import concurrent.futures as cf
+import contextlib
 from typing import Callable
 
 _POOL_WORKERS = 4
@@ -40,8 +44,8 @@ _pool = None
 
 def _executor():
     """The shared pool, rebuilt only when the executor CLASS changed
-    since the last call (i.e. a test swapped in the serial inline
-    executor, or swapped it back out)."""
+    since the last call (i.e. :func:`serial_legs` swapped in the serial
+    inline executor, or swapped it back out)."""
     global _pool
     cls = cf.ThreadPoolExecutor
     if _pool is None or type(_pool) is not cls:
@@ -52,17 +56,80 @@ def _executor():
 def run_legs(*fns: Callable):
     """Run the given zero-arg legs concurrently on the shared pool and
     return their results in argument order; the first leg exception
-    propagates. Each leg is wrapped in ``inheritable_thread_target``
-    so Spark job properties set by the caller apply to the legs'
-    jobs (wrapping is a no-op when a test's serial executor runs the
-    leg inline on the calling thread: it re-sets the thread's own
-    properties)."""
-    try:
-        from pyspark.util import inheritable_thread_target as _itt
-    except ImportError:  # pragma: no cover - pyspark always present
-        def _itt(f):
-            return f
+    propagates. Each leg runs with the caller's Spark job properties
+    and session tags, and leaves its thread's tags as it found them
+    (under :func:`serial_legs` that thread is the caller's). Legs
+    called from a thread with no active Spark session run unwrapped."""
+    from pyspark.sql import SparkSession
+    from pyspark.util import inheritable_thread_target
 
+    session = SparkSession.getActiveSession()
+    if session is None:
+        legs = fns
+    else:
+        inherit = inheritable_thread_target(session)
+
+        def restoring(fn):
+            inner = inherit(fn)
+
+            def leg():
+                before = session.getTags()
+                try:
+                    return inner()
+                finally:
+                    session.clearTags()
+                    for tag in before:
+                        session.addTag(tag)
+
+            return leg
+
+        legs = [restoring(fn) for fn in fns]
     pool = _executor()
-    futs = [pool.submit(_itt(fn)) for fn in fns]
+    futs = [pool.submit(leg) for leg in legs]
     return [f.result() for f in futs]
+
+
+class _SerialFuture:
+    def __init__(self, fn, *a, **kw):
+        try:
+            self._res, self._exc = fn(*a, **kw), None
+        except BaseException as e:  # noqa: BLE001 - re-raised by result()
+            self._res, self._exc = None, e
+
+    def result(self):
+        if self._exc is not None:
+            raise self._exc
+        return self._res
+
+
+class _SerialExecutor:
+    """Drop-in for ``concurrent.futures.ThreadPoolExecutor`` that runs
+    each submitted callable inline on the calling thread."""
+
+    def __init__(self, *a, **kw):
+        pass
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        return False
+
+    def submit(self, fn, *a, **kw):
+        return _SerialFuture(fn, *a, **kw)
+
+    def map(self, fn, *iterables):
+        return list(map(fn, *iterables))
+
+
+@contextlib.contextmanager
+def serial_legs():
+    """Run every :func:`run_legs` leg inline, in argument order, on the
+    calling thread until the block exits; the real pool class is put
+    back afterwards, also when the block raises."""
+    real = cf.ThreadPoolExecutor
+    cf.ThreadPoolExecutor = _SerialExecutor
+    try:
+        yield
+    finally:
+        cf.ThreadPoolExecutor = real

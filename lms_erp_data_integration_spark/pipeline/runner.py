@@ -16,7 +16,7 @@ column exists, add/delete splits.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Mapping, Sequence
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -142,14 +142,8 @@ class SyncPipeline:
       diffs, winning only 2 of 5 interleaved pairs (seeds 41-45). The
       report from the observed counts is part of the gain."""
 
-    def __init__(
-        self,
-        sink: Sink,
-        order: Sequence[str] = UPDATE_ORDER,
-        observe: bool = False,
-    ):
+    def __init__(self, sink: Sink, observe: bool = False):
         self.sink = sink
-        self.order = tuple(order)
         self.observe = observe
         self.observed: dict[str, dict] = {}
 
@@ -160,13 +154,13 @@ class SyncPipeline:
         the reference's mirror-table allowlist)."""
         from pyspark.sql import Observation
 
-        unknown = set(updates) - set(self.order)
+        unknown = set(updates) - set(UPDATE_ORDER)
         if unknown:
             raise NameError(f"unknown update entities: {sorted(unknown)}")
         applied = []
         self.observed = {}
         observations: dict[str, Observation] = {}
-        for name in self.order:
+        for name in UPDATE_ORDER:
             if name in updates:
                 df = updates[name]
                 if self.observe:

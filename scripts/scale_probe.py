@@ -36,7 +36,7 @@ under /tmp/sfprobe/sf1.0:
   same time range — the per-partition stress the sweep-line two-phase
   cumsum is designed for.
 
-Timing: min-of-2 per (query, sf), same discipline as bench.py.
+Timing: min-of-2 ``bench.timed_run`` samples per (query, sf).
 Usage: python scripts/scale_probe.py [out_dir] [--only q1,q2,...]
        python scripts/scale_probe.py --decade2 [--only q1,q2,...]
 Results merge into scale_probe_result.json (existing rows for
@@ -56,7 +56,6 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -492,6 +491,18 @@ def merge_decade1_rows(
         }
 
 
+def min_of_2(spark, fn, sf_dir: str, name: str) -> float:
+    """The faster of two ``bench.timed_run`` samples; a failed run
+    raises with its reason instead of timing as -1.0."""
+    import bench
+
+    errors: dict[str, str] = {}
+    best = min(bench.timed_run(spark, sf_dir, errors, fn, name) for _ in range(2))
+    if errors:
+        raise RuntimeError(f"{name}: {errors[name]}")
+    return best
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     only: list[str] = []
@@ -517,7 +528,6 @@ def main() -> int:
         con.close()
 
     import __spark_entry__ as entry_mod
-    from lms_erp_data_integration_spark.caching import release_cached
     from lms_erp_data_integration_spark.session import get_spark
 
     qs = entry_mod.queries()
@@ -533,19 +543,8 @@ def main() -> int:
         spark = get_spark(app_name=f"scale_probe_{name}")
         spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-        def timed(fn, sf_dir: str) -> float:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-                release_cached()
-            return best
-
-        t01 = timed(qs[name], SRC)
-        t10 = timed(qs[name], out_dir)
+        t01 = min_of_2(spark, qs[name], SRC, name)
+        t10 = min_of_2(spark, qs[name], out_dir, name)
         spark.stop()
         exp = math.log10(t10 / t01)
         rows.append((name, t01, t10, exp))
@@ -600,7 +599,6 @@ def main_decade2(only: list[str]) -> int:
         con.close()
 
     import __spark_entry__ as entry_mod
-    from lms_erp_data_integration_spark.caching import release_cached
     from lms_erp_data_integration_spark.session import get_spark
 
     qs = entry_mod.queries()
@@ -610,19 +608,8 @@ def main_decade2(only: list[str]) -> int:
         spark = get_spark(app_name=f"scale_probe2_{name}")
         spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-        def timed(sf_dir: str) -> float:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-                release_cached()
-            return best
-
-        t1 = timed(sf1_dir)
-        t10 = timed(sf10_dir)
+        t1 = min_of_2(spark, qs[name], sf1_dir, name)
+        t10 = min_of_2(spark, qs[name], sf10_dir, name)
         spark.stop()
         exp2 = math.log10(t10 / t1)
         rows.append((name, t1, t10, exp2))

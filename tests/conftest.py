@@ -28,48 +28,6 @@ def _half_mem_total() -> str:
 os.environ.setdefault("SPARK_DRIVER_MEM", _half_mem_total())
 
 
-class _SerialFuture:
-    def __init__(self, fn, *a, **kw):
-        try:
-            self._res, self._exc = fn(*a, **kw), None
-        except BaseException as e:  # noqa: BLE001
-            self._res, self._exc = None, e
-
-    def result(self):
-        if self._exc is not None:
-            raise self._exc
-        return self._res
-
-
-class _SerialExecutor:
-    """Drop-in for ``concurrent.futures.ThreadPoolExecutor`` that runs
-    each submitted callable inline on the calling thread. Patched over
-    the real class to pin that ``concurrency.run_legs`` legs give the
-    same results threaded and serial."""
-
-    def __init__(self, *a, **kw):
-        pass
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        return False
-
-    def submit(self, fn, *a, **kw):
-        return _SerialFuture(fn, *a, **kw)
-
-    def map(self, fn, *iterables):
-        return list(map(fn, *iterables))
-
-
-@pytest.fixture
-def serial_executor():
-    """The serial inline executor class, for
-    ``monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", ...)``."""
-    return _SerialExecutor
-
-
 @pytest.fixture(scope="session")
 def spark():
     # Small core count for test latency; configs identical to prod factory.

@@ -146,15 +146,13 @@ def test_cli_sync_missing_inputs(spark, tmp_path):
         _run_sync(erp_dir, raw_dir, mirror_dir, tmp_path / "out2")
 
 
-def test_cli_sync_overlap_matches_serial(
-    spark, tmp_path, monkeypatch, serial_executor
-):
+def test_cli_sync_overlap_matches_serial(spark, tmp_path):
     """The overlapped night (loads, DQ gates, mirror writes and mirror
     reads as run_legs legs) writes the same seven CSVs and four mirrors
     and prints the same report as the same legs run inline."""
-    import concurrent.futures as cf
     import glob
 
+    from lms_erp_data_integration_spark.concurrency import serial_legs
     from lms_erp_data_integration_spark.pipeline.mirror import (
         MIRROR_ENTITIES,
         read_mirror,
@@ -179,8 +177,8 @@ def test_cli_sync_overlap_matches_serial(
         return csvs, mirrors, report
 
     threaded = night("threaded")
-    monkeypatch.setattr(cf, "ThreadPoolExecutor", serial_executor)
-    serial = night("serial")
+    with serial_legs():
+        serial = night("serial")
     assert threaded == serial
     csvs, mirrors, _ = threaded
     assert csvs["student_users"][1]  # the diff found the missing student

@@ -1,10 +1,9 @@
 """The §2.6 leg-overlap rows must be CONCURRENCY-NEUTRAL: a plan whose
 independent driver-blocking legs run from the shared thread pool
 (``concurrency.run_legs``) must produce bit-identical rows to the same
-legs run inline on the calling thread. Pinned by monkeypatching
-``concurrent.futures.ThreadPoolExecutor`` with a serial inline
-executor (``run_legs`` resolves the pool class at call time, so the
-patch takes effect per invocation).
+legs run inline on the calling thread. Pinned with
+``concurrency.serial_legs`` (``run_legs`` resolves the pool class at
+call time, so the swap takes effect per invocation).
 
 Scope (r14 ADVICE #5): the serial arm pins "threaded legs == the same
 legs run inline", not "new == pre-overlap code" — for
@@ -16,7 +15,7 @@ results are unused) and pins THAT equality too.
 
 from __future__ import annotations
 
-import concurrent.futures as cf
+import threading
 
 import pytest
 
@@ -28,14 +27,12 @@ from lms_erp_data_integration_spark.caching import release_cached
 @pytest.mark.parametrize(
     "name", ["sync_pipeline_run_report", "stream_sim_ivf_search"]
 )
-def test_threaded_legs_match_serial_rows(
-    spark, sf_dir, name, monkeypatch, serial_executor
-):
+def test_threaded_legs_match_serial_rows(spark, sf_dir, name):
     fn = plans.QUERIES[name]
     threaded = sorted(map(tuple, fn(spark, sf_dir).collect()))
     release_cached()
-    monkeypatch.setattr(cf, "ThreadPoolExecutor", serial_executor)
-    serial = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    with concurrency.serial_legs():
+        serial = sorted(map(tuple, fn(spark, sf_dir).collect()))
     release_cached()
     assert threaded == serial
     assert threaded  # non-empty: the plan actually ran both arms
@@ -59,3 +56,43 @@ def test_run_report_matches_without_materialization(
     release_cached()
     assert threaded == skipped
     assert threaded
+
+
+def test_legs_carry_the_callers_tags_and_leave_none_behind(spark, recwarn):
+    """Each leg sees the caller's session tags; a pool thread reused by a
+    later call carries no stale tag; serial legs leave the caller's
+    tags as they were."""
+    barrier = threading.Barrier(concurrency._POOL_WORKERS, timeout=60)
+
+    def tags():
+        barrier.wait()  # one leg per pool thread
+        return sorted(spark.getTags())
+
+    legs = [tags] * concurrency._POOL_WORKERS
+    spark.addTag("ab_x")
+    try:
+        assert concurrency.run_legs(*legs) == [["ab_x"]] * len(legs)
+    finally:
+        spark.removeTag("ab_x")
+    assert concurrency.run_legs(*legs) == [[]] * len(legs)
+
+    def tag_inside():
+        spark.addTag("leg")
+        return sorted(spark.getTags())
+
+    spark.addTag("ab_y")
+    try:
+        with concurrency.serial_legs():
+            assert concurrency.run_legs(tag_inside) == [["ab_y", "leg"]]
+        assert sorted(spark.getTags()) == ["ab_y"]
+    finally:
+        spark.removeTag("ab_y")
+    assert not [w for w in recwarn if "Tags will not be inherited" in str(w.message)]
+
+
+def test_legs_called_from_a_thread_without_a_session(spark):
+    out = []
+    t = threading.Thread(target=lambda: out.append(concurrency.run_legs(lambda: 1, lambda: 2)))
+    t.start()
+    t.join(60)
+    assert not t.is_alive() and out == [[1, 2]]
