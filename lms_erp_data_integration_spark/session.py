@@ -11,32 +11,39 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from . import cds
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 _MEM_UNIT_MB = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
 
 
-def _max_result_size_mb(driver_mem: str) -> int:
-    """spark.driver.maxResultSize budget in MiB for a given driver
-    heap: heap/6 capped at 8 GiB (the measured hot-shingle broadcast
-    decompression headroom) and floored at Spark's stock 1 GiB — so a
-    4g driver keeps the 1g fail-fast guard instead of inheriting an
-    8g ceiling its heap can't honor (r11 ADVICE #1). Accepts every
-    suffix form Spark's JavaUtils does (k/m/g/t and kb/mb/gb/tb,
-    any case) plus a bare byte count; anything unparseable falls
-    back to the stock 1 GiB floor rather than failing the session."""
+def _heap_mb(driver_mem: str) -> float | None:
+    """A driver heap size in MiB, or None when unparseable. Accepts
+    every suffix form Spark's JavaUtils does (k/m/g/t and kb/mb/gb/tb,
+    any case) plus a bare byte count."""
     s = driver_mem.strip().lower()
     if s.endswith("b") and len(s) > 1 and s[-2] in _MEM_UNIT_MB:
         s = s[:-1]  # gb -> g, mb -> m, kb -> k, tb -> t
     try:
         unit = _MEM_UNIT_MB.get(s[-1]) if s else None
-        heap_mb = (
-            float(s[:-1]) * unit if unit else float(s) / (1024 * 1024)
-        )
+        return float(s[:-1]) * unit if unit else float(s) / (1024 * 1024)
     except (ValueError, IndexError):
-        heap_mb = 6 * 1024.0  # unparseable: keep the stock 1g guard
+        return None
+
+
+def _max_result_size_mb(driver_mem: str) -> int:
+    """spark.driver.maxResultSize budget in MiB for a given driver
+    heap: heap/6 capped at 8 GiB and floored at Spark's stock 1 GiB, so
+    a small driver keeps the fail-fast collect guard instead of a
+    ceiling its heap cannot honour. An unparseable size gets the
+    stock 1 GiB rather than failing the session."""
+    heap_mb = _heap_mb(driver_mem)
+    if heap_mb is None:
+        heap_mb = 6 * 1024.0
     return int(min(8 * 1024, max(1024, heap_mb // 6)))
 
 
@@ -62,6 +69,8 @@ def get_spark(
     ensure_protobuf()
     master = master or f"local[{DEFAULT_CPUS}]"
     cpus = DEFAULT_CPUS if "local" in master else "200"
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
+    extra_conf = extra_conf or {}
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -71,7 +80,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # At 100 TB: keep scan partitions bounded so a single task's
@@ -88,15 +97,11 @@ def get_spark(
         # the incoming snapshot (per-term), never the whole table.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # Whole-stage-codegen class cache (static conf, default 100
-        # entries). A long-lived session serving a large query surface
-        # (193 registered queries here; any real multi-tenant cluster)
-        # evicts every generated class between repeat runs at the
-        # default, so each re-run pays full janino re-compilation —
-        # measured 5.4 s vs 2.4 s warm on the ngram-Jaccard plan (the
-        # r9 bench "regression" was exactly this: min-of-3 sweeps where
-        # all three samples were eviction-cold). Sized to hold the
-        # whole suite's generated classes; memory cost is source
-        # strings + class refs, negligible against a 48g driver.
+        # entries). A session serving the 223 registered queries evicts
+        # every generated class between repeat runs at the default, so
+        # each re-run pays full janino re-compilation (5.4 s vs 2.4 s
+        # warm on the ngram-Jaccard plan). Sized to hold the whole
+        # suite's generated classes; the memory cost is negligible.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
         # Runtime semi-join reduction: when a selective dimension
         # filter feeds a shuffle join, inject a bloom filter on the
@@ -110,18 +115,18 @@ def get_spark(
         # shingle strings: < 64 MiB compressed, > 1 GiB row-serialized)
         # then blows the 1g default during the driver-side broadcast
         # collect — measured on the 100x probe drop's hot-shingle
-        # anti-join. Sized to the DRIVER HEAP, not globally (r11
-        # ADVICE #1): 8g against the default 48g heap, scaled down to
-        # heap/6 on smaller drivers so the fail-fast collect guard is
-        # never replaced by a driver OOM, and never below Spark's 1g
-        # default (the guard must not get STRICTER than stock).
-        .config(
-            "spark.driver.maxResultSize",
-            f"{_max_result_size_mb(os.environ.get('SPARK_DRIVER_MEM', '48g'))}m",
-        )
+        # anti-join. Sized to the driver heap, so the fail-fast collect
+        # guard is never replaced by a driver OOM.
+        .config("spark.driver.maxResultSize", f"{_max_result_size_mb(driver_mem)}m")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    # Launch options matter only when a new driver JVM starts; a
+    # running gateway is reused as it is.
+    launch = None
+    if SparkContext._gateway is None:
+        heap_mb = _heap_mb(extra_conf.get("spark.driver.memory", driver_mem))
+        launch = cds.plan(heap_mb, extra_conf)
+    spark = launch.start(builder) if launch else builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
