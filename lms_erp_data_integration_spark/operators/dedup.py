@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import tracked_persist
+from ..hints import bounded_broadcast
 from .text import shingle_array
 
 
@@ -760,7 +761,7 @@ def cross_corpus_contamination(
         ).alias("shingle"),
     )
     return (
-        tr.join(F.broadcast(ev), "shingle")
+        tr.join(bounded_broadcast(ev, "eval-bounded", "eval-set shingles"), "shingle")
         .groupBy("train_id", "eval_id")
         .agg(F.count(F.lit(1)).alias("shared_ngrams"))
         .where(F.col("shared_ngrams") >= min_shared)

@@ -7,17 +7,15 @@ truth-for-term not present in the mirror" plus, for enrollments, the
 bidirectional add/drop variant (``DailyEnrollment.sql`` — README.md:4
 "create and remove").
 
-Scale posture: join strategy is left to AQE (``broadcast_right`` defaults
-to ``False``). AQE promotes the build side to a broadcast anti-join at
+Scale posture: the diff joins carry no broadcast hint; AQE picks the
+strategy. It promotes the build side to a broadcast anti-join at
 runtime from its *observed* shuffle size whenever it fits
-``autoBroadcastJoinThreshold`` — so a genuinely bounded mirror (one
+``autoBroadcastJoinThreshold``, so a genuinely bounded mirror (one
 term's worth of rows) still gets the map-side no-shuffle plan, while an
 sf-proportional mirror degrades gracefully to a sort-merge join with
 skew splitting instead of hard-failing at Spark's 8 GB / 512M-row
-broadcast limits. Callers that KNOW the right side is small and want to
-skip the sizing shuffle can opt in with ``broadcast_right=True``; an
-explicit hint bypasses the size threshold, so it must never be applied
-to a side that grows with the corpus.
+broadcast limits. An explicit hint bypasses the size threshold, so it
+is never applied to a side that grows with the corpus (``hints.py``).
 """
 
 from __future__ import annotations
@@ -27,32 +25,28 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _maybe_broadcast(df: DataFrame, do_broadcast: bool) -> DataFrame:
-    return F.broadcast(df) if do_broadcast else df
+from ..hints import bounded_broadcast
 
 
 def missing_rows(
     truth: DataFrame,
     mirror: DataFrame,
     keys: Sequence[str],
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """Rows of ``truth`` whose key is absent from ``mirror``
     (left-anti on equi-keys) — the ``Missing*.sql`` family
-    (``src/jenzabar.py:52-55``). Join strategy is AQE-selected
-    unless ``broadcast_right=True`` (see module docstring)."""
-    return truth.join(_maybe_broadcast(mirror, broadcast_right), list(keys), "left_anti")
+    (``src/jenzabar.py:52-55``). Join strategy is AQE-selected (see
+    module docstring)."""
+    return truth.join(mirror, list(keys), "left_anti")
 
 
 def present_rows(
     truth: DataFrame,
     mirror: DataFrame,
     keys: Sequence[str],
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """Left-semi companion ("already present" checks)."""
-    return truth.join(_maybe_broadcast(mirror, broadcast_right), list(keys), "left_semi")
+    return truth.join(mirror, list(keys), "left_semi")
 
 
 def snapshot_diff(
@@ -62,7 +56,6 @@ def snapshot_diff(
     status_col: str = "status",
     add_status: str = "active",
     drop_status: str = "deleted",
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """Bidirectional snapshot diff (``DailyEnrollment.sql`` semantics,
     SURVEY.md section 2.4 Q5):
@@ -76,12 +69,12 @@ def snapshot_diff(
     kl = list(keys)
     adds = (
         truth.select(*kl)
-        .join(_maybe_broadcast(mirror.select(*kl), broadcast_right), kl, "left_anti")
+        .join(mirror.select(*kl), kl, "left_anti")
         .withColumn(status_col, F.lit(add_status))
     )
     drops = (
         mirror.select(*kl)
-        .join(_maybe_broadcast(truth.select(*kl), broadcast_right), kl, "left_anti")
+        .join(truth.select(*kl), kl, "left_anti")
         .withColumn(status_col, F.lit(drop_status))
     )
     return adds.unionByName(drops)
@@ -191,7 +184,7 @@ def reconcile_mirror(
         return (
             df.withColumn("_b", (bucket_col % n_buckets).cast("long"))
             .join(
-                F.broadcast(drifted),
+                bounded_broadcast(drifted, "k-row", "<= n_buckets bucket ids"),
                 F.col("_b") == F.col("bucket"),
                 "left_semi",
             )
@@ -205,5 +198,4 @@ def reconcile_mirror(
         status_col=status_col,
         add_status="missing_in_mirror",
         drop_status="extra_in_mirror",
-        broadcast_right=False,
     )

@@ -14,14 +14,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import tracked_persist
+from ..hints import bounded_broadcast
 
 
 def pagerank_micros(
     edges: DataFrame,
     iterations: int = 3,
     damping_pct: int = 85,
-    broadcast_ranks: bool = True,
-    collapse_multi_edges: bool = False,
     degrees: DataFrame | None = None,
     handle_dangling: bool = False,
 ) -> DataFrame:
@@ -46,11 +45,6 @@ def pagerank_micros(
     that. Rounds therefore do ONE node-sized join each instead of a
     degree join plus a rank join. The degree and rank tables are
     node-sized and partially aggregated map-side.
-    ``collapse_multi_edges=True`` additionally pre-groups parallel
-    edges into ``cnt`` so rounds scan distinct pairs — a win exactly
-    when the graph is heavily multi-edged, at the price of a full-width
-    ``groupBy(src, dst)`` shuffle (benchmarked a net loss on the
-    near-unique-pair part graph, so opt-in).
 
     ``degrees`` (columns ``node``, ``deg``) lets the caller supply
     out-degrees computed UPSTREAM of the edge expansion — e.g. from
@@ -60,34 +54,18 @@ def pagerank_micros(
     must cover exactly the nodes with at least one out-edge, with
     multi-edge multiplicity.
 
-    ``broadcast_ranks=True`` (default) broadcast-joins the rank vector
-    each round — right while the node set fits executor memory
-    (catalog-sized graphs), and the persisted adjacency then never
-    reshuffles at all. At web-scale node counts a forced broadcast
-    would OOM the driver, so pass ``False``: the adjacency is instead
-    hash-partitioned on ``src`` before the persist, and the rank
-    vector arrives partitioned on the node key from its own aggregate,
-    so every round reuses that one partitioning. The node-sized rank
-    vector is localCheckpoint'ed between rounds (same pattern as
-    ``dedup.duplicate_clusters``): driver-side re-optimization of the
-    deepening plan at AQE stage boundaries otherwise dominates the
-    actual work.
+    The rank and degree vectors are node-sized, so they carry no
+    broadcast hint (at web-scale node counts a forced broadcast would
+    OOM the driver; AQE still broadcasts them while they are small).
+    The adjacency is hash-partitioned on ``src`` before the persist,
+    and the rank vector arrives partitioned on the node key from its
+    own aggregate, so every round reuses that one partitioning. The
+    node-sized rank vector is localCheckpoint'ed between rounds (same
+    pattern as ``dedup.duplicate_clusters``): driver-side
+    re-optimization of the deepening plan at AQE stage boundaries
+    otherwise dominates the actual work.
     """
-    edges = edges.select("src", "dst")
-    if collapse_multi_edges:
-        # k parallel src->dst edges each contribute (r div deg), i.e.
-        # exactly cnt * (r div deg) — the recurrence is unchanged but
-        # every round scans distinct pairs instead of raw edges. Worth
-        # the full-width groupBy(src,dst) shuffle ONLY on genuinely
-        # multi-edged graphs (repeat co-purchases, web links): the
-        # sf0.1 part graph is 2.4M raw edges vs 2.39M distinct pairs,
-        # where this path measurably LOSES (benchmarked r4) — hence
-        # opt-in, not default.
-        edges = edges.groupBy("src", "dst").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-    else:
-        edges = edges.withColumn("cnt", F.lit(1).cast("long"))
+    edges = edges.select("src", "dst").withColumn("cnt", F.lit(1).cast("long"))
     # Out-degree (with multiplicity) folds into the persisted adjacency
     # via ONE node-sized join up front, so each round does a single
     # rank join instead of rank + degree.
@@ -95,9 +73,7 @@ def pagerank_micros(
         # deg must come from the expanded edge list: persist it (two
         # consumers), then derive deg — partial-aggregated map-side to
         # node count, a narrow shuffle.
-        if not broadcast_ranks:
-            edges = edges.repartition("src")
-        edges = tracked_persist(edges)
+        edges = tracked_persist(edges.repartition("src"))
         deg = edges.groupBy("src").agg(F.sum("cnt").alias("deg")).select(
             F.col("src").alias("dsrc"), "deg"
         )
@@ -105,29 +81,23 @@ def pagerank_micros(
         deg = degrees.select(
             F.col("node").alias("dsrc"), F.col("deg").cast("long").alias("deg")
         )
-    adj = edges.join(
-        F.broadcast(deg) if broadcast_ranks else deg,
-        F.col("src") == F.col("dsrc"),
-    ).select("src", "dst", "cnt", "deg")
-    if degrees is not None and not broadcast_ranks:
+    adj = edges.join(deg, F.col("src") == F.col("dsrc")).select(
+        "src", "dst", "cnt", "deg"
+    )
+    if degrees is not None:
         adj = adj.repartition("src")
     adj = tracked_persist(adj)
     keep = 100 - damping_pct
 
-    def side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_ranks else df
-
     if handle_dangling:
-        return _iterate_with_dangling(
-            adj, deg, side, iterations, damping_pct, keep
-        )
+        return _iterate_with_dangling(adj, deg, iterations, damping_pct, keep)
 
     rank = deg.select(
         F.col("dsrc").alias("node"), F.lit(1_000_000).cast("long").alias("r")
     )
     for i in range(iterations):
         rank = (
-            adj.join(side(rank), F.col("src") == F.col("node"))
+            adj.join(rank, F.col("src") == F.col("node"))
             .select(
                 F.col("dst").alias("node2"),
                 (F.col("cnt") * F.expr("r div deg")).alias("c"),
@@ -156,7 +126,6 @@ def pagerank_micros(
 def _iterate_with_dangling(
     adj: DataFrame,
     deg: DataFrame,
-    side,
     iterations: int,
     damping_pct: int,
     keep: int,
@@ -179,11 +148,13 @@ def _iterate_with_dangling(
         .union(adj.select(F.col("dst").alias("node")))
         .distinct()
     )
-    n_nodes = F.broadcast(nodes.agg(F.count(F.lit(1)).alias("n_nodes")))
+    n_nodes = bounded_broadcast(
+        nodes.agg(F.count(F.lit(1)).alias("n_nodes")), "scalar-agg", "1-row count"
+    )
     rank = nodes.select("node", F.lit(1_000_000).cast("long").alias("r"))
     for i in range(iterations):
         contrib = (
-            adj.join(side(rank), F.col("src") == F.col("node"))
+            adj.join(rank, F.col("src") == F.col("node"))
             .select(
                 F.col("dst").alias("node2"),
                 (F.col("cnt") * F.expr("r div deg")).alias("c"),
@@ -191,10 +162,12 @@ def _iterate_with_dangling(
             .groupBy("node2")
             .agg(F.sum("c").alias("sc"))
         )
-        dangling = F.broadcast(
-            rank.join(
-                side(deg), F.col("node") == F.col("dsrc"), "left_anti"
-            ).agg(F.coalesce(F.sum("r"), F.lit(0)).alias("dang_sum"))
+        dangling = bounded_broadcast(
+            rank.join(deg, F.col("node") == F.col("dsrc"), "left_anti").agg(
+                F.coalesce(F.sum("r"), F.lit(0)).alias("dang_sum")
+            ),
+            "scalar-agg",
+            "1-row dangling mass",
         )
         rank = (
             nodes.join(contrib, F.col("node") == F.col("node2"), "left")
@@ -280,7 +253,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     nn = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
     ne = und.agg(F.count(F.lit(1)).alias("n_edges"))
     return (
-        nn.crossJoin(F.broadcast(ne))
-        .crossJoin(F.broadcast(tri))
+        nn.crossJoin(bounded_broadcast(ne, "scalar-agg", "1-row edge count"))
+        .crossJoin(bounded_broadcast(tri, "scalar-agg", "1-row triangle count"))
         .select("n_nodes", "n_edges", "triangles")
     )

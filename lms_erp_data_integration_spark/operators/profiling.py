@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..hints import bounded_broadcast
+
 
 def join_size_profile(
     left: DataFrame,
@@ -58,10 +60,12 @@ def join_size_profile(
         F.count(F.lit(1)).alias("matching_keys"),
         F.max("kk").alias("max_key_rows"),
     )
+    left_keys = a.agg(F.count(F.lit(1)).alias("left_keys"))
+    right_keys = b.agg(F.count(F.lit(1)).alias("right_keys"))
     return stats.crossJoin(
-        F.broadcast(a.agg(F.count(F.lit(1)).alias("left_keys")))
+        bounded_broadcast(left_keys, "scalar-agg", "1-row key count")
     ).crossJoin(
-        F.broadcast(b.agg(F.count(F.lit(1)).alias("right_keys")))
+        bounded_broadcast(right_keys, "scalar-agg", "1-row key count")
     )
 
 
@@ -84,7 +88,7 @@ def key_skew_profile(
         F.count(F.lit(1)).alias("n_distinct_keys"),
     )
     return (
-        k.crossJoin(F.broadcast(t))
+        k.crossJoin(bounded_broadcast(t, "scalar-agg", "1-row totals"))
         .select(
             "key",
             "n",
@@ -132,7 +136,9 @@ def equi_width_histogram(
         F.max(col).alias("_hi"),
         F.count(F.lit(1)).alias("_n"),
     )
-    bucketed = df.select(F.col(col).alias("_x")).crossJoin(F.broadcast(mm))
+    bucketed = df.select(F.col(col).alias("_x")).crossJoin(
+        bounded_broadcast(mm, "scalar-agg", "1-row min/max")
+    )
     width = (F.col("_hi") - F.col("_lo")) / F.lit(float(buckets))
     bid = F.when(F.col("_hi") == F.col("_lo"), F.lit(0)).otherwise(
         F.least(

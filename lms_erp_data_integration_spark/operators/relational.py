@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..hints import bounded_broadcast
+
 
 def asof_join(
     left: DataFrame,
@@ -154,7 +156,9 @@ def interval_max_concurrency(
         F.coalesce(F.sum("bucket_net").over(w_prev), F.lit(0)).alias("offset"),
     )
     return (
-        local.join(F.broadcast(offsets), ["k", "bucket"])
+        local.join(
+            bounded_broadcast(offsets, "k-row", "keys x time buckets"), ["k", "bucket"]
+        )
         .groupBy(F.col("k").alias(key_col))
         .agg(
             F.sum("n_starts").cast("long").alias("n_intervals"),

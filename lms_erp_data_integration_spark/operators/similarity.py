@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..caching import tracked_persist
+from ..hints import bounded_broadcast
 
 
 def _to_double(arr: Column) -> Column:
@@ -65,7 +66,7 @@ def brute_force_topk(
     )
     scored = (
         vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
-        .join(F.broadcast(q))
+        .join(bounded_broadcast(q, "k-row", "caller-bounded query vectors"))
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -132,7 +133,7 @@ def ivf_assign(
     c = centroids.select(
         F.col("centroid_id"), F.col(vec_col).alias("_cv")
     )
-    scored = vectors.join(F.broadcast(c)).select(
+    scored = vectors.join(bounded_broadcast(c, "k-row", "IVF centroids")).select(
         id_col,
         vec_col,
         "centroid_id",
@@ -199,7 +200,7 @@ def ivf_probe_assign(
     """(id, vec, centroid_id) rows for each of the ``nprobe`` nearest
     centroids — multi-probe generalization of :func:`ivf_assign`."""
     c = centroids.select(F.col("centroid_id"), F.col(vec_col).alias("_cv"))
-    scored = vectors.join(F.broadcast(c)).select(
+    scored = vectors.join(bounded_broadcast(c, "k-row", "IVF centroids")).select(
         id_col,
         vec_col,
         "centroid_id",
@@ -238,7 +239,7 @@ def ivf_topk(
         assigned.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col), "centroid_id"
         )
-        .join(F.broadcast(q_assigned), "centroid_id")
+        .join(bounded_broadcast(q_assigned, "k-row", "queries x nprobe"), "centroid_id")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -682,7 +683,7 @@ def kmeans_assignments(
             lambda acc, x: acc + x,
         )
         if coarse_groups is None:
-            scored = v.join(F.broadcast(state)).select(
+            scored = v.join(bounded_broadcast(state, "k-row", "k centroids")).select(
                 F.col(id_col), F.col("_vi"), F.col("cid"), dist.alias("_dist")
             )
         else:
@@ -710,7 +711,7 @@ def kmeans_assignments(
                 lambda acc, x: acc + x,
             )
             ga = (
-                state.join(F.broadcast(seeds))
+                state.join(bounded_broadcast(seeds, "k-row", "g coarse seeds"))
                 .select("cid", "gid", cdist.alias("_cd"))
                 .withColumn(
                     "_rn",
@@ -762,7 +763,7 @@ def kmeans_assignments(
                 lambda acc, x: acc + x,
             )
             pg = (
-                v.join(F.broadcast(gstate))
+                v.join(bounded_broadcast(gstate, "k-row", "g coarse cells"))
                 .select(id_col, "gid", gdist.alias("_gd"))
                 .withColumn(
                     "_rn",
@@ -777,7 +778,7 @@ def kmeans_assignments(
             cells = state.join(ga, "cid")
             scored = (
                 v.join(pg, id_col)
-                .join(F.broadcast(cells), "gid")
+                .join(bounded_broadcast(cells, "k-row", "k centroids"), "gid")
                 .select(
                     F.col(id_col),
                     F.col("_vi"),
@@ -853,7 +854,7 @@ def _pq_parts(
         F.col(id_col).alias("cid"), "s", F.col("sv").alias("cv")
     )
     best = (
-        sub.join(F.broadcast(cent), "s")
+        sub.join(bounded_broadcast(cent, "k-row", "PQ codebook"), "s")
         .groupBy(id_col, "s")
         .agg(
             F.min(
@@ -925,14 +926,14 @@ def pq_adc_topk(
     q = sub.where(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("query_id"), "s", F.col("sv").alias("qv")
     )
-    dtable = q.join(F.broadcast(cent), "s").select(
+    dtable = q.join(bounded_broadcast(cent, "k-row", "PQ codebook"), "s").select(
         "query_id",
         "s",
         "cid",
         _sq_dist(F.col("qv"), F.col("cv")).alias("_dd"),
     )
     adc = (
-        best.join(F.broadcast(dtable), ["s", "cid"])
+        best.join(bounded_broadcast(dtable, "k-row", "ADC table"), ["s", "cid"])
         .where(F.col(id_col) != F.col("query_id"))
         .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
         .agg(F.sum("_dd").alias("adist"))

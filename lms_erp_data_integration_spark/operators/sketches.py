@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..hints import bounded_broadcast
+
 # 60-bit hash: 15 hex chars of md5 -> non-negative BIGINT, exactly
 # reproducible in DuckDB as ('0x' || substr(md5(x), 1, 15))::BIGINT.
 HASH60_BITS = 60
@@ -324,8 +326,14 @@ def kmv_sketch(
         ).otherwise(
             (F.lit(32 * KMV_K * KMV_U) / F.col("_est")).cast("long")
         )
-        d = d.join(F.broadcast(est.select(*group_cols, bound.alias("_b"))),
-                   list(group_cols))
+        d = d.join(
+            bounded_broadcast(
+                est.select(*group_cols, bound.alias("_b")),
+                "sketch-sized",
+                "per-group k-th minimum bound",
+            ),
+            list(group_cols),
+        )
         d = d.where(F.col("h") <= F.col("_b")).select(*group_cols, "h")
     w = Window.partitionBy(*group_cols).orderBy("h")
     return d.select(
@@ -382,7 +390,11 @@ def bottomk_sample(
             F.col("_n") <= F.lit(32 * k), F.lit((1 << HASH60_BITS) - 1)
         ).otherwise((F.lit(32 * k * KMV_U) / F.col("_n")).cast("long"))
         d = d.join(
-            F.broadcast(n.select(*group_cols, bound.alias("_b"))),
+            bounded_broadcast(
+                n.select(*group_cols, bound.alias("_b")),
+                "sketch-sized",
+                "per-group k-th hash bound",
+            ),
             list(group_cols),
         )
         d = d.where(F.col("h") <= F.col("_b")).drop("_b")

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..hints import bounded_broadcast
+
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # match files.maxPartitionBytes
 
 
@@ -200,7 +202,7 @@ def write_zorder(
     for c in cols:
         aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
     mm = df.agg(*aggs)
-    scaled = df.crossJoin(F.broadcast(mm))
+    scaled = df.crossJoin(bounded_broadcast(mm, "scalar-agg", "1-row min/max"))
     bucket_cols = []
     top = (1 << bits) - 1
     for c in cols:

@@ -14,14 +14,13 @@ from . import curation_queries  # noqa: F401, E402
 from . import media_queries  # noqa: F401, E402
 from . import sketch_queries  # noqa: F401, E402  (r8: HLL / Count-Min / Bloom)
 
-# Round-15 driver-window rotation (executing the plan committed at r14
-# close, below): 8 sync rows pinned, then the rows whose plan source
-# changes in THIS round's optimization pass (swapped in ahead of
-# fillers as they land), then the re-verification backlog
-# oldest-first: the two rows displaced to r8-last-checked
-# (stream_sliding_counts, stream_stateful_user_totals — swapped out of
-# the r14 window for that round's changed rows), the full r9 cohort
-# alphabetically, then r10-oldest alphabetically to fill 50.
+# Window rotation rule: the external correctness gate checks the first
+# 50 rows of all_queries(), which puts PRIORITY first. Keep the 8 sync
+# rows pinned, then every row whose own plan source changed since its
+# last check, then fill the window with the re-verification backlog:
+# oldest last check first (CORRECTNESS_r*.json), alphabetical within a
+# round. After rotating, stamp with scripts/update_checked_hashes.py;
+# earlier windows are in git history and the CORRECTNESS_r*.json files.
 registry.PRIORITY = [
     # core reference surface — pinned every round
     "sync_missing_faculty_users",
@@ -32,79 +31,49 @@ registry.PRIORITY = [
     "sync_ctl_library_courses",
     "sync_ctl_library_sections",
     "sync_clean_users",
-    # changed in r15 optimization pass: the calibrate->search
-    # composition serves the chosen-point search from the persisted
-    # curve candidate relation (the oracle's own ranked-CTE slice)
-    # instead of a second full ivf_topk pass — A/B 0.69x, rows equal,
-    # equivalence pinned by the strengthened both-branches test. The
-    # other two rows enter via the _nprobe_curve_and_candidates
-    # closure (their plans are bit-identical: persist=False path).
-    "llm_sim_ivf_calibrated_search",
-    "llm_sim_ivf_nprobe_curve",
-    "stream_sim_ivf_search",
-    # changed in r15 (r14 ADVICE): the three §2.6 overlap sites now
-    # run their legs through concurrency.run_legs (shared
-    # InheritableThread-wrapped pool) — results pinned identical by
-    # the neutrality tests + overlap A/B (run_report 0.81x retained)
-    "sync_pipeline_run_report",
-    "llm_corpus_curate_calibrated",
-    # backlog: last driver check r8 (displaced by the r14 swaps)
-    "stream_sliding_counts",
-    "stream_stateful_user_totals",
-    # backlog: the r9 cohort (last driver check r9), alphabetical
-    "llm_contamination_ngram",
-    "llm_corpus_mix",
-    "llm_corpus_stats",
-    "llm_dedup_cluster_histogram",
-    "llm_dedup_exact",
-    "llm_dedup_semantic_kmeans",
-    "llm_dedup_semantic_verified",
-    "llm_dedup_simhash",
+    # changed: broadcast hints go through hints.bounded_broadcast, and
+    # rel_pagerank_parts no longer passes pagerank_micros a broadcast flag
+    "llm_corpus_curate",
+    "llm_corpus_rebalance",
+    "llm_domain_mix_doremi",
+    "llm_emb_label_drift",
     "llm_heavy_hitters_cms",
-    "llm_multimodal_frame_sample",
-    "llm_multimodal_payload_meta",
-    "llm_pack_sequences",
-    "llm_pii_redaction",
-    "llm_quality_gate",
-    "llm_sample_stratified",
-    "llm_shard_assignment",
-    "llm_sim_kmeans_assign",
-    "llm_sim_kmeans_purity",
-    "llm_text_fingerprint",
-    "llm_text_language_id",
-    "llm_text_quality",
-    "llm_text_repetition",
-    "llm_text_sentiment",
-    "llm_text_tfidf_top_terms",
-    "llm_text_token_counts",
-    "llm_text_top_terms",
+    "llm_sim_pq_recall",
     "llm_text_unigram_lm",
-    "rel_approx_distinct",
-    "rel_approx_percentile_contract",
-    "rel_asof_last_purchase",
-    "rel_event_transitions",
-    "rel_quantile_sketch",
-    "rel_quantile_sketch_audit",
-    # fillers: r10-oldest alphabetically — each is displaced (rotating
-    # back with the r16 backlog) when an r15-changed row needs the slot
-    "llm_bpe_top_pairs",
-    "llm_corpus_divergence",
+    "rel_outlier_iqr",
+    "rel_pagerank_parts",
+    "rel_q10_returned_items",
+    "rel_q11_important_parts",
+    "rel_q15_top_supplier",
+    "rel_q22_inactive_balance",
+    "rel_q2_min_cost_supplier",
+    "rel_q5_region_revenue",
+    "rel_q7_volume_shipping",
+    "rel_q8_market_share",
+    "rel_q9_product_profit",
+    "rel_quantile_sketch_audit_sampled",
+    "rel_range_join_balance_bands",
+    "rel_theta_setops",
+    "stream_static_enrich",
+    # backlog: last checked in r10, alphabetical
+    "llm_dedup_rate_by_source",
+    "llm_dup_span_detect",
+    "llm_emb_ivf_append",
+    "llm_emb_matryoshka_recall",
+    "llm_emb_norm_stats",
+    "llm_emb_quantize",
+    "llm_memorization_span",
+    "llm_pack_efficiency",
+    "llm_sample_importance",
+    "llm_sim_ivf_recall",
+    "llm_text_entropy",
+    "llm_tokenizer_fertility",
+    "llm_winnow_fingerprint",
+    "rel_cascade_delete_impact",
+    "rel_cdc_log_compaction",
+    "rel_dim_surrogate_keys",
+    "rel_dq_expectations",
+    "rel_event_burst_pairs",
+    "rel_grouping_sets",
+    "rel_incremental_agg_merge",
 ]
-
-# r16 rotation plan (committed now so the next round executes it, the
-# discipline every round since r9): keep the 8 sync rows pinned and
-# any r16-new/changed rows ahead of fillers, then fill the
-# re-verification backlog oldest-first — the remaining r10 cohort
-# alphabetically (last driver check r10, minus whatever r15 fillers
-# already covered), then the r11 cohort alphabetically to fill 50,
-# plus any r15-window fillers displaced by late r15 changes. Stamp
-# with scripts/update_checked_hashes.py (window-only, NOT
-# --bootstrap; --bootstrap now self-guards on the v1 manifest).
-
-# Historical driver windows (audit trail): each round's PRIORITY list
-# is preserved verbatim in git history at that round's artifact commit
-# (r9 b0d794f, r10 c328d10, r11 8b57e9f, r12 95d6b8a, r13 784334b).
-# The dead module-level copies the file used to carry (r14 review:
-# ~450 never-read lines growing every round) were removed; the
-# CORRECTNESS_r*.json artifacts remain the authoritative record of
-# what each window verified.

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import Catalog
+from ..hints import bounded_broadcast
 from ..operators import similarity as sim
 from ..operators import text as tx
 from .registry import query
@@ -164,7 +165,7 @@ def outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     iqr = F.col("q3") - F.col("q1")
     lo, hi = F.col("q1") - 1.5 * iqr, F.col("q3") + 1.5 * iqr
     return (
-        v.join(F.broadcast(q), "event_type")
+        v.join(bounded_broadcast(q, "enum-bounded", "per event_type"), "event_type")
         .groupBy("event_type", "q1", "q3")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -736,7 +737,7 @@ def text_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = cnt.agg(F.sum("c").alias("n"))
     scored = (
         tok.join(cnt, "w")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(bounded_broadcast(tot, "scalar-agg", "1-row token total"))
         .select(
             "doc_id",
             F.round(
@@ -819,7 +820,7 @@ def _divergence_frame(docs: DataFrame) -> DataFrame:
     contrib = (
         sc.join(cc, "w")
         .join(st.select("source", F.col("n").alias("n_tokens")), "source")
-        .crossJoin(F.broadcast(ct))
+        .crossJoin(bounded_broadcast(ct, "scalar-agg", "1-row token total"))
         .select(
             "source",
             "n_tokens",
@@ -898,7 +899,7 @@ def domain_mix_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_tokens").alias("total"),
         F.count(F.lit(1)).alias("n_sources"),
     )
-    scored = kl.crossJoin(F.broadcast(tot)).select(
+    scored = kl.crossJoin(bounded_broadcast(tot, "scalar-agg", "1-row totals")).select(
         "source",
         "n_tokens",
         "kl_micronats",
@@ -917,7 +918,7 @@ def domain_mix_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     norm = weighted.agg(F.sum("score").alias("z"))
     return (
-        weighted.crossJoin(F.broadcast(norm))
+        weighted.crossJoin(bounded_broadcast(norm, "scalar-agg", "1-row normalizer"))
         .select(
             "source",
             "n_tokens",
@@ -1086,7 +1087,7 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = (
         cnt.orderBy(F.desc("exact_cnt"), F.asc("w"))
         .limit(CMS_TOPK)
-        .crossJoin(F.broadcast(total))
+        .crossJoin(bounded_broadcast(total, "scalar-agg", "1-row grand total"))
     )
     probes = top.select(
         "w",
@@ -1105,7 +1106,7 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     est = (
-        probes.join(F.broadcast(sketch), ["seed", "bucket"])
+        probes.join(bounded_broadcast(sketch, "k-row", "CMS cells"), ["seed", "bucket"])
         .groupBy("w", "exact_cnt", "n_total")
         .agg(F.min("cell").alias("cms_est"))
     )
@@ -1432,15 +1433,7 @@ def pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", F.explode("parts").alias("dst"))
         .where(F.col("src") != F.col("dst"))
     )
-    # broadcast_ranks=False: the node set is PART-cardinality —
-    # corpus-proportional — so the rank vector must never ride a
-    # mandatory broadcast (r12 audit; the operator's True path is for
-    # catalog-sized graphs only). The False path hash-partitions the
-    # persisted adjacency once and reuses that partitioning every
-    # round.
-    return pagerank_micros(
-        edges, iterations=3, degrees=degrees, broadcast_ranks=False
-    ).select(
+    return pagerank_micros(edges, iterations=3, degrees=degrees).select(
         F.col("node").alias("p_partkey"), F.col("r").alias("rank_micros")
     )
 

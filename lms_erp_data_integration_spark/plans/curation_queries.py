@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..hints import bounded_broadcast
 from ..operators import dedup as dd
 from .llm_queries import _STOP_SQL, quality_gate
 from .registry import query
@@ -144,7 +145,7 @@ def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k = deduped.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
     t = k.agg(F.sum("n_docs").alias("total"))
-    rates = k.crossJoin(F.broadcast(t)).select(
+    rates = k.crossJoin(bounded_broadcast(t, "scalar-agg", "1-row total")).select(
         "lang",
         F.least(
             F.lit(1_000_000).cast("long"),
@@ -160,7 +161,9 @@ def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long")
         % 1_000_000
     )
-    kept = deduped.join(F.broadcast(rates), "lang").where(
+    kept = deduped.join(
+        bounded_broadcast(rates, "enum-bounded", "one row per lang"), "lang"
+    ).where(
         bucket < F.col("keep_rate_ppm")
     )
     return kept.groupBy("lang", "source").agg(
@@ -757,7 +760,7 @@ def psi_report_from_scores(sc_df: DataFrame) -> DataFrame:
         samp, "score", F.col("doc_id"),
         list(range(10, 100, 10)), "g", prefix="e",
     )
-    bk = g.join(F.broadcast(edges), "g").select(
+    bk = g.join(bounded_broadcast(edges, "sketch-sized", "1 row, 9 edges"), "g").select(
         "source",
         psi_bucket_expr(
             [F.col(f"e_p{p}") for p in range(10, 100, 10)]
@@ -794,8 +797,8 @@ def psi_from_bucket_counts(srcc: DataFrame, refc: DataFrame) -> DataFrame:
     )
     reft = refc.agg(F.sum("n_ref").cast("long").alias("n_total"))
     sh = (
-        grid.crossJoin(F.broadcast(reft))
-        .join(F.broadcast(refc), "bucket", "left")
+        grid.crossJoin(bounded_broadcast(reft, "scalar-agg", "1-row reference total"))
+        .join(bounded_broadcast(refc, "k-row", "10 buckets"), "bucket", "left")
         .join(srcc, ["source", "bucket"], "left")
         .select(
             "source",

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..hints import bounded_broadcast
 from ..operators import dedup as dd
 from ..operators import text as tx
 from .registry import query
@@ -983,7 +984,7 @@ def corpus_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
     t = k.agg(F.sum("n_docs").alias("total"))
     target = F.when(F.col("lang") == "en", 400_000).otherwise(150_000)
-    return k.crossJoin(F.broadcast(t)).select(
+    return k.crossJoin(bounded_broadcast(t, "scalar-agg", "1-row total")).select(
         "lang",
         "n_docs",
         F.expr("(n_docs * 1000000) div total").alias("share_ppm"),
@@ -2063,9 +2064,9 @@ def _threshold_curve_frame(
     )
     nd = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     return (
-        ths.crossJoin(F.broadcast(nd))
-        .join(F.broadcast(pl), "threshold_pct", "left")
-        .join(F.broadcast(dl), "threshold_pct", "left")
+        ths.crossJoin(bounded_broadcast(nd, "scalar-agg", "1-row document count"))
+        .join(bounded_broadcast(pl, "k-row", "per threshold"), "threshold_pct", "left")
+        .join(bounded_broadcast(dl, "k-row", "per threshold"), "threshold_pct", "left")
         .select(
             "threshold_pct",
             "n_docs",

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..hints import bounded_broadcast
 from .registry import query
 
 
@@ -137,8 +138,14 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") == F.col("s_suppkey"))
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
-        .join(F.broadcast(cat.nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(cat.region), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(
+            bounded_broadcast(cat.nation, "fixed-dim", "25 rows"),
+            F.col("c_nationkey") == F.col("n_nationkey"),
+        )
+        .join(
+            bounded_broadcast(cat.region, "fixed-dim", "5 rows"),
+            F.col("n_regionkey") == F.col("r_regionkey"),
+        )
         .where(F.col("r_name") == "ASIA")
         .groupBy("n_name")
         .agg(
@@ -784,7 +791,10 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             cat.lineitem.where(F.col("l_returnflag") == "R"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        .join(F.broadcast(cat.nation), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(
+            bounded_broadcast(cat.nation, "fixed-dim", "25 rows"),
+            F.col("c_nationkey") == F.col("n_nationkey"),
+        )
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(rev.alias("_rev"))
         .orderBy(F.col("_rev").desc(), F.col("c_custkey"))
@@ -1161,7 +1171,7 @@ def q22_inactive_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("date"))
     ).select("o_custkey")
     return (
-        cust.crossJoin(F.broadcast(avg_bal))
+        cust.crossJoin(bounded_broadcast(avg_bal, "scalar-agg", "1-row average"))
         .where(_dec("c_acctbal") > F.col("a"))
         .join(o96, F.col("o_custkey") == F.col("c_custkey"), "left_anti")
         .groupBy(F.substring("c_name", 17, 2).alias("cgroup"))
@@ -1242,7 +1252,7 @@ def range_join_balance_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = (
         spark.range(5)
         .withColumnRenamed("id", "k")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(bounded_broadcast(stats, "scalar-agg", "1-row min/max"))
         .select(
             "k",
             (F.col("mn") + F.col("k") * width).alias("lo"),
@@ -1255,7 +1265,7 @@ def range_join_balance_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         | (F.col("last_band") & (F.col("c_acctbal") <= F.col("hi")))
     )
     return (
-        cust.join(F.broadcast(bands), on)
+        cust.join(bounded_broadcast(bands, "k-row", "5 literal bands"), on)
         .groupBy(F.col("k").alias("band"))
         .agg(
             F.count(F.lit(1)).alias("n_custs"),

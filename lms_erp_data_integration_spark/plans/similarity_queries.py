@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..hints import bounded_broadcast
 from ..operators import similarity as sim
 from .registry import query
 
@@ -877,7 +878,7 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dist", F.col("neighbor_id")
     )
     exact = (
-        v.crossJoin(F.broadcast(q))
+        v.crossJoin(bounded_broadcast(q, "k-row", "fixed query-vector count"))
         .where(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -1022,7 +1023,7 @@ def emb_label_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("vm").alias("s"), F.count(F.lit(1)).alias("n")
     )
     gsum = per.groupBy("dim").agg(F.sum("s").alias("g"))
-    j = per.join(F.broadcast(gsum), "dim")
+    j = per.join(bounded_broadcast(gsum, "enum-bounded", "per embedding dim"), "dim")
     v = j.groupBy("label").agg(
         F.max("n").cast("long").alias("n_vecs"),
         F.sort_array(F.collect_list(F.struct("dim", "s"))).alias("_sl"),
@@ -1703,14 +1704,14 @@ def _nprobe_curve_and_candidates(
         F.col("centroid_id"),
     )
     qc = (
-        queries.join(F.broadcast(c))
+        queries.join(bounded_broadcast(c, "k-row", "k IVF centroids"))
         .withColumn("rnc", F.row_number().over(wq))
         .where(F.col("rnc") <= IVF_NPROBE_MAX)
         .select("query_id", "_qv", "centroid_id", "rnc")
     )
     assigned = sim.ivf_assign(emb, centroids)
     cand = (
-        assigned.join(F.broadcast(qc), "centroid_id")
+        assigned.join(bounded_broadcast(qc, "k-row", "queries x nprobe"), "centroid_id")
         .where(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -1755,9 +1756,9 @@ def _nprobe_curve_and_candidates(
         F.count(F.lit(1)).cast("long").alias("scanned_pairs")
     )
     curve = (
-        nps.crossJoin(F.broadcast(nq))
-        .join(F.broadcast(hits), "nprobe", "left")
-        .join(F.broadcast(scan), "nprobe", "left")
+        nps.crossJoin(bounded_broadcast(nq, "scalar-agg", "1-row query count"))
+        .join(bounded_broadcast(hits, "k-row", "per nprobe point"), "nprobe", "left")
+        .join(bounded_broadcast(scan, "k-row", "per nprobe point"), "nprobe", "left")
         .select(
             "nprobe",
             "n_queries",

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..hints import bounded_broadcast
 from ..operators import sketches as sk
 from ..operators.text import ws_tokens
 from .registry import query
@@ -549,8 +550,12 @@ def theta_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sa.h").alias("h"),
     )
     comc = (
-        com.join(F.broadcast(pair.select("yr_a", "yr_b", "theta_min")),
-                 ["yr_a", "yr_b"])
+        com.join(
+            bounded_broadcast(
+                pair.select("yr_a", "yr_b", "theta_min"), "enum-bounded", "year pairs"
+            ),
+            ["yr_a", "yr_b"],
+        )
         .where(F.col("h") < F.col("theta_min"))
         .groupBy("yr_a", "yr_b")
         .agg(F.count(F.lit(1)).alias("common_below"))
@@ -588,9 +593,18 @@ def theta_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     na = exact_n.alias("na")
     nb = exact_n.alias("nb")
     return (
-        sel.join(F.broadcast(na), F.col("na.yr") == F.col("yr_a"))
-        .join(F.broadcast(nb), F.col("nb.yr") == F.col("yr_b"))
-        .join(F.broadcast(exact_i), ["yr_a", "yr_b"])
+        sel.join(
+            bounded_broadcast(na, "enum-bounded", "per-year sketch sizes"),
+            F.col("na.yr") == F.col("yr_a"),
+        )
+        .join(
+            bounded_broadcast(nb, "enum-bounded", "per-year sketch sizes"),
+            F.col("nb.yr") == F.col("yr_b"),
+        )
+        .join(
+            bounded_broadcast(exact_i, "enum-bounded", "per year pair"),
+            ["yr_a", "yr_b"],
+        )
         .select(
             "yr_a", "yr_b", "est_a", "est_b", "common_below",
             "est_intersect",
@@ -861,14 +875,14 @@ def quantile_sketch_audit_sampled(
         "95L, est_p95) AS (pct, est_v)",
     )
     rk = (
-        sl.join(F.broadcast(el), "grp")
+        sl.join(bounded_broadcast(el, "sketch-sized", "4 rows per group"), "grp")
         .groupBy("grp", "pct", "sample_k", "est_v")
         .agg(
             F.sum(
                 F.when(F.col("v") <= F.col("est_v"), 1).otherwise(0)
             ).alias("_le")
         )
-        .join(F.broadcast(sn), "grp")
+        .join(bounded_broadcast(sn, "enum-bounded", "per group"), "grp")
         .select(
             "grp",
             "pct",

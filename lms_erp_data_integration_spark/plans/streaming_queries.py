@@ -16,6 +16,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..hints import bounded_broadcast
 from ..streaming.windows import (
     documents_stream,
     events_stream,
@@ -468,7 +469,9 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = (
         cat.customer.select("c_custkey", "c_nationkey")
         .join(
-            F.broadcast(cat.nation.select("n_nationkey", "n_name")),
+            bounded_broadcast(
+                cat.nation.select("n_nationkey", "n_name"), "fixed-dim", "25 rows"
+            ),
             F.col("c_nationkey") == F.col("n_nationkey"),
         )
         .select(F.col("c_custkey").alias("user_id"), F.col("n_name").alias("nation"))

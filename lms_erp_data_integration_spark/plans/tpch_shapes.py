@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..hints import bounded_broadcast
 from .registry import query
 
 
@@ -84,10 +85,15 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = cat.lineitem.select("l_partkey", "l_suppkey").distinct()
     eu = (
         cat.supplier.join(
-            F.broadcast(cat.nation), F.col("s_nationkey") == F.col("n_nationkey")
+            bounded_broadcast(cat.nation, "fixed-dim", "25 rows"),
+            F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .join(
-            F.broadcast(cat.region.where(F.col("r_name") == "EUROPE")),
+            bounded_broadcast(
+                cat.region.where(F.col("r_name") == "EUROPE"),
+                "fixed-dim",
+                "one region row",
+            ),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
@@ -148,8 +154,14 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat.supplier.join(li, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(cat.orders, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(cat.customer, F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
+        .join(
+            bounded_broadcast(n1, "fixed-dim", "25 rows"),
+            F.col("s_nationkey") == F.col("n1_key"),
+        )
+        .join(
+            bounded_broadcast(n2, "fixed-dim", "25 rows"),
+            F.col("c_nationkey") == F.col("n2_key"),
+        )
         .where(
             ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
             | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
@@ -209,10 +221,20 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .join(cat.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
         .join(
-            F.broadcast(cat.region.where(F.col("r_name") == "AMERICA")),
+            bounded_broadcast(n1, "fixed-dim", "25 rows"),
+            F.col("s_nationkey") == F.col("n1_key"),
+        )
+        .join(
+            bounded_broadcast(n2, "fixed-dim", "25 rows"),
+            F.col("c_nationkey") == F.col("n2_key"),
+        )
+        .join(
+            bounded_broadcast(
+                cat.region.where(F.col("r_name") == "AMERICA"),
+                "fixed-dim",
+                "one region row",
+            ),
             F.col("n2_region") == F.col("r_regionkey"),
         )
         .select(
@@ -253,7 +275,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cat.lineitem, F.col("p_partkey") == F.col("l_partkey"))
         .join(cat.supplier, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(cat.orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(cat.nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(
+            bounded_broadcast(cat.nation, "fixed-dim", "25 rows"),
+            F.col("s_nationkey") == F.col("n_nationkey"),
+        )
         .groupBy(
             F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year")
         )
@@ -286,7 +311,10 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = cat.nation.where(F.col("n_name") == "NATION_5")
     pv = (
         cat.lineitem.join(cat.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(
+            bounded_broadcast(nat, "fixed-dim", "one nation row"),
+            F.col("s_nationkey") == F.col("n_nationkey"),
+        )
         .groupBy("l_partkey")
         .agg(F.sum(_dec("l_extendedprice") * _dec("l_quantity")).alias("value_dec"))
     )
@@ -294,7 +322,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("value_dec").cast("double") * F.lit(0.001)).alias("threshold")
     )
     return (
-        pv.join(F.broadcast(total))
+        pv.join(bounded_broadcast(total, "scalar-agg", "1-row threshold"))
         .where(F.col("value_dec").cast("double") > F.col("threshold"))
         .select(
             F.col("l_partkey").alias("partkey"),
@@ -363,9 +391,13 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = revenue.agg(F.max("total_revenue").alias("max_revenue"))
     return (
         cat.supplier.join(
-            F.broadcast(revenue.join(F.broadcast(top)).where(
-                F.col("total_revenue") == F.col("max_revenue")
-            )),
+            bounded_broadcast(
+                revenue.join(
+                    bounded_broadcast(top, "scalar-agg", "1-row max revenue")
+                ).where(F.col("total_revenue") == F.col("max_revenue")),
+                "scalar-agg",
+                "the suppliers tied at the max, ~1 row",
+            ),
             F.col("s_suppkey") == F.col("supplier_no"),
         )
         .select("s_suppkey", "s_name", "total_revenue")

@@ -3,6 +3,9 @@
 plan-function source + oracle SQL + the source of every package-local
 helper the plan transitively references.
 
+The manifest ``checked_hashes.json`` holds both hashes of each row as
+of its last stamp, ``{name: {"v2": ..., "v1": ...}}``.
+
 r12 ADVICE #1 closed the known hole in the v1 hash (plan-function
 source only): helper-level behavior changes (e.g. the fixed-point DCT
 rework inside ``operators/multimodal.py``) did not flip the consumer
@@ -43,18 +46,6 @@ from lms_erp_data_integration_spark import plans
 PKG = "lms_erp_data_integration_spark"
 MANIFEST_PATH = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "checked_hashes.json"
-)
-# v1 (plan-function source + oracle only, NO closure walk) manifest —
-# the bootstrap-restamp guard (r14 ADVICE, medium): a shared-helper
-# change (catalog.py etc.) flips nearly every v2 closure hash, and the
-# only safe way to restamp the ~170 rows outside the driver window is
-# to PROVE their own plan source didn't change. This manifest records
-# each query's v1 hash as of its last stamp; update_checked_hashes.py
-# refuses --bootstrap while any non-window row's v1 hash has drifted,
-# and test_plan_source_changes_enter_driver_window keeps the manifest
-# honest between stamps.
-V1_MANIFEST_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "plan_v1_hashes.json"
 )
 
 _NAME_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
@@ -150,10 +141,17 @@ def _src_and_tokens(obj: object) -> tuple[str, set[str], object] | None:
 _REGISTRY_AGGREGATES = (plans.QUERIES, plans.ORACLES)
 
 
+# A path derived from ``__file__`` (``vendor._PBSHIM_DIR``) names where
+# the checkout sits, not behaviour: hash it relative to the repo root so
+# a checkout elsewhere computes the same hashes.
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _const_repr(obj: object) -> str | None:
     if any(obj is agg for agg in _REGISTRY_AGGREGATES):
         return None
-    return _stable_const(obj)
+    const = _stable_const(obj)
+    return None if const is None else const.replace(_REPO_ROOT, "<repo>")
 
 
 def _walk(obj: object, seen: set[int], pieces: list[str]) -> None:
@@ -234,7 +232,10 @@ def query_v1_hash(name: str) -> str:
     closure walk — deliberately blind to shared-helper changes, so it
     distinguishes "this row's plan code changed" from "a helper in
     its closure changed". The v2 hash (``query_source_hash``) governs
-    window entry; this one governs bootstrap restamps."""
+    window entry; this one governs bootstrap restamps: a shared-helper
+    change flips nearly every v2 hash, and a ``--bootstrap`` restamp
+    of the rows outside the window is safe only while their v1
+    hashes prove that their own plan source did not change."""
     fn = plans.QUERIES[name]
     try:
         src = inspect.getsource(fn)

@@ -78,7 +78,7 @@ def test_snapshot_diff_daily_enrollment(spark, erp, mirror):
 
 def test_anti_join_default_leaves_strategy_to_aqe(spark, erp, mirror):
     """The sync diff sides are year-slices of fact tables — they grow
-    with the corpus, so the default must carry NO forced broadcast hint
+    with the corpus, so the diff must carry NO forced broadcast hint
     (a hint bypasses autoBroadcastJoinThreshold and hard-fails past the
     8 GB / 512M-row broadcast limits). Size-based selection must still
     pick a broadcast anti-join when the mirror is actually small."""
@@ -92,14 +92,6 @@ def test_anti_join_default_leaves_strategy_to_aqe(spark, erp, mirror):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-
-
-def test_anti_join_opt_in_broadcast_hint(spark, erp, mirror):
-    """broadcast_right=True is the explicit opt-in for callers that KNOW
-    the mirror is bounded — the hint must survive into the plan."""
-    out = missing_rows(term_slice(erp), term_slice(mirror), KEYS, broadcast_right=True)
-    logical = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "strategy=broadcast" in logical
 
 
 def test_drift_buckets_detects_only_drifted(spark):

@@ -6,7 +6,9 @@ introduces a cartesian product or un-pushes a filter)."""
 
 from __future__ import annotations
 
+import ast
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -252,11 +254,10 @@ def _hinted_control_plan(spark):
 
 
 def test_pagerank_broadcast_escape_hatch(spark):
-    """pagerank_micros(broadcast_ranks=False) must emit NO broadcast
-    hint — the rank vector is node-count-sized, and a forced broadcast
-    at web-scale node counts would OOM the driver. The default (True)
-    keeps the hint for catalog-sized graphs; both are asserted so the
-    marker format stays self-validating."""
+    """pagerank_micros must emit NO broadcast hint — the rank vector is
+    node-count-sized, and a forced broadcast at web-scale node counts
+    would OOM the driver. The hinted control keeps the marker format
+    self-validating."""
     from lms_erp_data_integration_spark.operators.graph import (
         pagerank_micros,
     )
@@ -264,20 +265,12 @@ def test_pagerank_broadcast_escape_hatch(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 1)], "src long, dst long"
     )
-    off = pagerank_micros(edges, 2, broadcast_ranks=False)
+    ranks = pagerank_micros(edges, 2)
     assert (
         "strategy=broadcast"
-        not in off._jdf.queryExecution().optimizedPlan().toString()
+        not in ranks._jdf.queryExecution().optimizedPlan().toString()
     )
-    on = pagerank_micros(edges, 2, broadcast_ranks=True)
-    assert (
-        "strategy=broadcast"
-        in on._jdf.queryExecution().optimizedPlan().toString()
-    )
-    # same exact integer result either way
-    assert sorted(map(tuple, off.collect())) == sorted(
-        map(tuple, on.collect())
-    )
+    assert "strategy=broadcast" in _hinted_control_plan(spark)
 
 
 def test_salted_distinct_exchanges_carry_salt(spark):
@@ -470,294 +463,137 @@ def test_bucketed_postings_index_side_joins_without_exchange(spark):
 
 
 # ---------------------------------------------------------------------------
-# Mandatory-broadcast audit (r11 verdict #2): the r11 decade-2 probe
-# proved an unbounded F.broadcast() hint on a corpus-dependent build
-# side blows spark.driver.maxResultSize at sf10 even though every gate
-# scale passes (AQE converts from COMPRESSED shuffle sizes; the hint
-# bypasses the threshold entirely). This audit keeps that class
-# extinct the way the r5 HUGEINT guard does: every F.broadcast( site
-# in the package must carry a one-line boundedness classification
-# here, and a new site without one fails the suite. Classifications
-# are prefixed with their bounded class:
-#   scalar-agg:   a 1-row (or few-row constant) aggregate
-#   fixed-dim:    a fixed-cardinality dimension (nation=25, region=5)
-#   enum-bounded: group cardinality bounded by an enum/value domain
-#                 (event_type, year, lang, pct, embedding dim index)
-#   k-row:        bounded by an operator parameter (centroids k,
-#                 nprobe list, sketch width, bucket count, top-k)
-#   sketch-sized: a sketch/sample frame (bottom-k rows, CMS cells)
-#   eval-bounded: a benchmark/eval probe set (small by construction)
-#   caller-gated: hint applied only under a flag; every registered
-#                 caller passes the scale-safe value for
-#                 corpus-proportional inputs
-# Corpus-proportional sides (supplier/part/customer slices, rank
-# vectors, hot-shingle sets) must NOT appear here — remove the hint
-# and let AQE decide (r11 dedup.py fix; r12 tpch/stream/pagerank
-# fixes).
+# Broadcast-hint audit: every hint in the package goes through
+# hints.bounded_broadcast, which names the bounded kind of its side
+# (rationale and kinds in the hints module docstring). The scanner
+# keys on the hint's syntax, not on where it sits, so moving or
+# renaming code cannot make it stale.
 
 _PKG_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "lms_erp_data_integration_spark",
 )
-
-BROADCAST_SITES = {
-    # --- plans/analytics_queries.py
-    ("plans/analytics_queries.py", "outlier_iqr", "q"):
-        "enum-bounded: per-event_type quantile pair (event_type enum)",
-    ("plans/analytics_queries.py", "text_unigram_lm", "tot"):
-        "scalar-agg: 1-row corpus token total",
-    ("plans/analytics_queries.py", "_divergence_frame", "ct"):
-        "scalar-agg: 1-row corpus token total",
-    ("plans/analytics_queries.py", "domain_mix_doremi", "tot"):
-        "scalar-agg: 1-row (total tokens, n_sources)",
-    ("plans/analytics_queries.py", "domain_mix_doremi", "norm"):
-        "scalar-agg: 1-row score normalizer",
-    ("plans/analytics_queries.py", "heavy_hitters_cms", "total"):
-        "scalar-agg: 1-row grand total",
-    ("plans/analytics_queries.py", "heavy_hitters_cms", "sketch"):
-        "k-row: CMS_SEEDS x CMS_WIDTH sketch cells (constants)",
-    # --- plans/curation_queries.py
-    ("plans/curation_queries.py", "corpus_curate", "t"):
-        "scalar-agg: 1-row kept-corpus total",
-    ("plans/curation_queries.py", "corpus_curate", "rates"):
-        "enum-bounded: per-lang keep rates (lang enum)",
-    ("plans/curation_queries.py", "psi_report_from_scores", "edges"):
-        "sketch-sized: ONE 9-edge decile row from the bottom-256 sample",
-    ("plans/curation_queries.py", "psi_from_bucket_counts", "reft"):
-        "scalar-agg: 1-row reference total",
-    ("plans/curation_queries.py", "psi_from_bucket_counts", "refc"):
-        "k-row: 10 decile-bucket reference counts",
-    # --- plans/llm_queries.py
-    ("plans/llm_queries.py", "corpus_rebalance", "t"):
-        "scalar-agg: 1-row corpus total",
-    ("plans/llm_queries.py", "_threshold_curve_frame", "nd"):
-        "scalar-agg: 1-row document count",
-    ("plans/llm_queries.py", "_threshold_curve_frame", "pl"):
-        "k-row: one row per sweep threshold (5 constants)",
-    ("plans/llm_queries.py", "_threshold_curve_frame", "dl"):
-        "k-row: one row per sweep threshold (5 constants)",
-    # --- plans/relational_queries.py
-    ("plans/relational_queries.py", "q5_region_revenue", "cat.nation"):
-        "fixed-dim: nation (25 rows at every SF)",
-    ("plans/relational_queries.py", "q5_region_revenue", "cat.region"):
-        "fixed-dim: region (5 rows at every SF)",
-    ("plans/relational_queries.py", "q10_returned_items", "cat.nation"):
-        "fixed-dim: nation",
-    ("plans/relational_queries.py", "q22_inactive_balance", "avg_bal"):
-        "scalar-agg: 1-row average balance",
-    ("plans/relational_queries.py", "range_join_balance_bands", "stats"):
-        "scalar-agg: 1-row min/max",
-    ("plans/relational_queries.py", "range_join_balance_bands", "bands"):
-        "k-row: 5 literal bands x the 1-row stats",
-    # --- plans/similarity_queries.py
-    ("plans/similarity_queries.py", "sim_pq_recall", "q"):
-        "k-row: fixture query vectors (constant count)",
-    ("plans/similarity_queries.py", "emb_label_drift", "gsum"):
-        "enum-bounded: per-dimension totals (embedding dim index)",
-    ("plans/similarity_queries.py", "_nprobe_curve_and_candidates", "c"):
-        "k-row: IVF centroids (k constant)",
-    ("plans/similarity_queries.py", "_nprobe_curve_and_candidates", "qc"):
-        "k-row: query x centroid distances (constants)",
-    ("plans/similarity_queries.py", "_nprobe_curve_and_candidates", "nq"):
-        "scalar-agg: 1-row query count",
-    ("plans/similarity_queries.py", "_nprobe_curve_and_candidates", "hits"):
-        "k-row: one row per nprobe sweep point",
-    ("plans/similarity_queries.py", "_nprobe_curve_and_candidates", "scan"):
-        "k-row: one row per nprobe sweep point",
-    # --- plans/sketch_queries.py
-    ("plans/sketch_queries.py", "theta_setops",
-     "pair.select('yr_a', 'yr_b', 'theta_min')"):
-        "enum-bounded: year-pair grid (event years)",
-    ("plans/sketch_queries.py", "theta_setops", "na"):
-        "enum-bounded: per-year sketch sizes",
-    ("plans/sketch_queries.py", "theta_setops", "nb"):
-        "enum-bounded: per-year sketch sizes",
-    ("plans/sketch_queries.py", "theta_setops", "exact_i"):
-        "enum-bounded: year-pair exact intersections",
-    ("plans/sketch_queries.py", "quantile_sketch_audit_sampled", "el"):
-        "sketch-sized: 4 estimate rows per group from the bottom-k sample",
-    ("plans/sketch_queries.py", "quantile_sketch_audit_sampled", "sn"):
-        "enum-bounded: per-group slice counts",
-    # --- plans/streaming_queries.py
-    ("plans/streaming_queries.py", "stream_static_enrich",
-     "cat.nation.select('n_nationkey', 'n_name')"):
-        "fixed-dim: nation (the customer map side carries NO hint)",
-    # --- plans/tpch_shapes.py
-    ("plans/tpch_shapes.py", "q2_min_cost_supplier", "cat.nation"):
-        "fixed-dim: nation",
-    ("plans/tpch_shapes.py", "q2_min_cost_supplier",
-     "cat.region.where(F.col('r_name') == 'EUROPE')"):
-        "fixed-dim: region slice",
-    ("plans/tpch_shapes.py", "q7_volume_shipping", "n1"):
-        "fixed-dim: nation",
-    ("plans/tpch_shapes.py", "q7_volume_shipping", "n2"):
-        "fixed-dim: nation",
-    ("plans/tpch_shapes.py", "q8_market_share", "n1"):
-        "fixed-dim: nation",
-    ("plans/tpch_shapes.py", "q8_market_share", "n2"):
-        "fixed-dim: nation",
-    ("plans/tpch_shapes.py", "q8_market_share",
-     "cat.region.where(F.col('r_name') == 'AMERICA')"):
-        "fixed-dim: region slice",
-    ("plans/tpch_shapes.py", "q9_product_profit", "cat.nation"):
-        "fixed-dim: nation",
-    ("plans/tpch_shapes.py", "q11_important_parts", "nat"):
-        "fixed-dim: single-nation slice",
-    ("plans/tpch_shapes.py", "q11_important_parts", "total"):
-        "scalar-agg: 1-row threshold",
-    ("plans/tpch_shapes.py", "q15_top_supplier",
-     "revenue.join(F.broadcast(top)).where("
-     "F.col('total_revenue') == F.col('max_revenue'))"):
-        "scalar-agg: scalar-MAX equality slice (ties of the max, ~1 row)",
-    ("plans/tpch_shapes.py", "q15_top_supplier", "top"):
-        "scalar-agg: 1-row max revenue",
-    # --- operators/dedup.py
-    ("operators/dedup.py", "cross_corpus_contamination", "ev"):
-        "eval-bounded: benchmark-suite shingles (eval sets are small "
-        "by construction; the TRAIN side is never hinted)",
-    # --- operators/diff.py
-    ("operators/diff.py", "_maybe_broadcast", "df"):
-        "caller-gated: do_broadcast flag; callers pass it only for "
-        "term-dimension mirrors",
-    ("operators/diff.py", "scoped", "drifted"):
-        "k-row: drifted bucket ids (<= n_buckets parameter)",
-    # --- operators/graph.py
-    ("operators/graph.py", "pagerank_micros", "deg"):
-        "caller-gated: broadcast_ranks flag; rel_pagerank_parts passes "
-        "False (part graph is corpus-proportional)",
-    ("operators/graph.py", "side", "df"):
-        "caller-gated: broadcast_ranks flag (see pagerank_micros)",
-    ("operators/graph.py", "_iterate_with_dangling",
-     "nodes.agg(F.count(F.lit(1)).alias('n_nodes'))"):
-        "scalar-agg: 1-row node count",
-    ("operators/graph.py", "_iterate_with_dangling",
-     "rank.join(side(deg), F.col('node') == F.col('dsrc'), 'left_anti')"
-     ".agg(F.coalesce(F.sum('r'), F.lit(0)).alias('dang_sum'))"):
-        "scalar-agg: 1-row dangling mass",
-    ("operators/graph.py", "triangle_count", "ne"):
-        "scalar-agg: 1-row edge count",
-    ("operators/graph.py", "triangle_count", "tri"):
-        "scalar-agg: 1-row triangle count",
-    # --- operators/profiling.py
-    ("operators/profiling.py", "join_size_profile",
-     "a.agg(F.count(F.lit(1)).alias('left_keys'))"):
-        "scalar-agg: 1-row key count",
-    ("operators/profiling.py", "join_size_profile",
-     "b.agg(F.count(F.lit(1)).alias('right_keys'))"):
-        "scalar-agg: 1-row key count",
-    ("operators/profiling.py", "key_skew_profile", "t"):
-        "scalar-agg: 1-row totals",
-    ("operators/profiling.py", "equi_width_histogram", "mm"):
-        "scalar-agg: 1-row min/max",
-    # --- operators/relational.py
-    ("operators/relational.py", "interval_max_concurrency", "offsets"):
-        "k-row: per-(key, bucket) running offsets (bucket parameter)",
-    # --- operators/similarity.py
-    ("operators/similarity.py", "brute_force_topk", "q"):
-        "k-row: query vectors (caller-bounded probe set)",
-    ("operators/similarity.py", "ivf_assign", "c"):
-        "k-row: IVF centroids",
-    ("operators/similarity.py", "ivf_probe_assign", "c"):
-        "k-row: IVF centroids",
-    ("operators/similarity.py", "ivf_topk", "q_assigned"):
-        "k-row: queries x nprobe assignments",
-    ("operators/similarity.py", "kmeans_assignments", "state"):
-        "k-row: k centroid state rows",
-    ("operators/similarity.py", "kmeans_assignments", "seeds"):
-        "k-row: g coarse seeds",
-    ("operators/similarity.py", "kmeans_assignments", "gstate"):
-        "k-row: g coarse cell states",
-    ("operators/similarity.py", "kmeans_assignments", "cells"):
-        "k-row: k centroid->cell assignments",
-    ("operators/similarity.py", "_pq_parts", "cent"):
-        "k-row: PQ codebook (subspaces x 256)",
-    ("operators/similarity.py", "pq_adc_topk", "cent"):
-        "k-row: PQ codebook",
-    ("operators/similarity.py", "pq_adc_topk", "dtable"):
-        "k-row: ADC distance table (queries x subspaces x 256)",
-    # --- operators/sketches.py
-    ("operators/sketches.py", "kmv_sketch",
-     "est.select(*group_cols, bound.alias('_b'))"):
-        "sketch-sized: per-group k-th minimum bound",
-    ("operators/sketches.py", "bottomk_sample",
-     "n.select(*group_cols, bound.alias('_b'))"):
-        "sketch-sized: per-group k-th hash bound",
-    # --- pipeline/layout.py
-    ("pipeline/layout.py", "write_zorder", "mm"):
-        "scalar-agg: 1-row per-column min/max",
-}
+_HINT_NAMES = {"broadcast", "broadcastjoin", "mapjoin"}
+_SQL_HINT_BLOCK = re.compile(r"/\*\+(.*?)\*/", re.S)
+_SQL_BROADCAST = re.compile(rf"\b(?:{'|'.join(_HINT_NAMES)})\s*\(", re.I)
 
 
-def _walk_broadcast_sites():
-    import ast
-
-    found = []
-    for root, _dirs, files in os.walk(_PKG_DIR):
-        for fn in sorted(files):
-            if not fn.endswith(".py"):
-                continue
-            path = os.path.join(root, fn)
-            rel = os.path.relpath(path, _PKG_DIR)
-            tree = ast.parse(open(path).read())
-
-            class V(ast.NodeVisitor):
-                def __init__(self):
-                    self.stack = ["<module>"]
-
-                def visit_FunctionDef(self, n):
-                    self.stack.append(n.name)
-                    self.generic_visit(n)
-                    self.stack.pop()
-
-                visit_AsyncFunctionDef = visit_FunctionDef
-
-                def visit_Call(self, n):
-                    f = n.func
-                    if (
-                        isinstance(f, ast.Attribute)
-                        and f.attr == "broadcast"
-                        and isinstance(f.value, ast.Name)
-                        and f.value.id == "F"
-                    ):
-                        arg = ast.unparse(n.args[0]) if n.args else "?"
-                        found.append((rel, self.stack[-1], arg))
-                    self.generic_visit(n)
-
-            V().visit(tree)
-    return found
+def _broadcast_hints(path: str) -> list[int]:
+    """Line numbers of the broadcast-join hints in one source file:
+    ``functions.broadcast(...)`` under any alias of
+    ``pyspark.sql.functions``, a bare ``broadcast`` imported from it,
+    ``.hint("broadcast")`` (or its BROADCASTJOIN/MAPJOIN synonyms) and
+    a SQL ``/*+ BROADCAST(...) */`` in any string. A
+    ``SparkContext.broadcast`` variable is not a join hint."""
+    tree = ast.parse(open(path).read())
+    modules, bare = set(), set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.ImportFrom):
+            for a in n.names:
+                if (n.module, a.name) == ("pyspark.sql", "functions"):
+                    modules.add(a.asname or a.name)
+                elif (n.module, a.name) == ("pyspark.sql.functions", "broadcast"):
+                    bare.add(a.asname or a.name)
+        elif isinstance(n, ast.Import):
+            for a in n.names:
+                if a.name == "pyspark.sql.functions" and a.asname:
+                    modules.add(a.asname)
+    hits = []
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Call):
+            f = n.func
+            arg0 = n.args[0] if n.args else None
+            if (
+                (isinstance(f, ast.Name) and f.id in bare)
+                or (
+                    isinstance(f, ast.Attribute)
+                    and f.attr == "broadcast"
+                    and isinstance(f.value, ast.Name)
+                    and f.value.id in modules
+                )
+                or (
+                    isinstance(f, ast.Attribute)
+                    and f.attr == "hint"
+                    and isinstance(arg0, ast.Constant)
+                    and str(arg0.value).lower() in _HINT_NAMES
+                )
+            ):
+                hits.append(n.lineno)
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if any(
+                _SQL_BROADCAST.search(b)
+                for b in _SQL_HINT_BLOCK.findall(n.value)
+            ):
+                hits.append(n.lineno)
+    return sorted(hits)
 
 
 def test_every_broadcast_hint_is_classified_bounded():
-    """r11 verdict #2: no mandatory F.broadcast() on a
-    corpus-dependent build side. Mechanism: every site must carry a
-    reviewed boundedness classification above; an unclassified site
-    fails (forcing the review), and a removed site must drop its
-    entry (keeping the table honest)."""
-    found = _walk_broadcast_sites()
-    unclassified = [s for s in found if s not in BROADCAST_SITES]
-    assert not unclassified, (
-        "F.broadcast( sites without a boundedness classification — "
-        "either the build side is provably bounded (add a one-line "
-        "entry to BROADCAST_SITES) or it is corpus-dependent (remove "
-        f"the hint and let AQE decide): {unclassified}"
+    """No broadcast hint in the package bypasses bounded_broadcast: an
+    unclassified hint on a corpus-proportional side collects it to the
+    driver at scale. The helper itself holds the one real hint."""
+    helper = os.path.join(_PKG_DIR, "hints.py")
+    found = {}
+    for root, _dirs, files in os.walk(_PKG_DIR):
+        for fn in files:
+            path = os.path.join(root, fn)
+            if fn.endswith(".py") and path != helper:
+                lines = _broadcast_hints(path)
+                if lines:
+                    found[os.path.relpath(path, _PKG_DIR)] = lines
+    assert not found, (
+        "broadcast hints outside hints.bounded_broadcast — hint a "
+        "provably bounded side through it, or drop the hint and let "
+        f"AQE decide: {found}"
     )
-    stale = [k for k in BROADCAST_SITES if k not in set(found)]
-    assert not stale, f"stale BROADCAST_SITES entries: {stale}"
-    bad_prefix = [
-        k
-        for k, v in BROADCAST_SITES.items()
-        if not v.startswith(
-            (
-                "scalar-agg:",
-                "fixed-dim:",
-                "enum-bounded:",
-                "k-row:",
-                "sketch-sized:",
-                "eval-bounded:",
-                "caller-gated:",
-            )
-        )
-    ]
-    assert not bad_prefix, (
-        f"classification must lead with a bounded class: {bad_prefix}"
+    assert len(_broadcast_hints(helper)) == 1
+
+
+def test_broadcast_hint_scanner_flags_every_form(tmp_path):
+    src = tmp_path / "mod.py"
+    src.write_text(
+        "from pyspark.sql import functions as F\n"
+        "from pyspark.sql.functions import broadcast as bc\n"
+        "a = x.join(F.broadcast(y), 'k')\n"
+        "b = x.join(bc(y), 'k')\n"
+        "c = x.join(y.hint('BROADCAST'), 'k')\n"
+        "d = spark.sql('SELECT /*+ REPARTITION(4), BROADCAST(y) */ * FROM x')\n"
+        "e = spark.sparkContext.broadcast([1, 2])\n"
+        "f = x.join(y.hint('shuffle_hash'), 'k')\n"
+        "g = spark.sql('SELECT /*+ MERGE(y) */ * FROM x')\n"
     )
+    assert _broadcast_hints(str(src)) == [3, 4, 5, 6]
+
+
+@pytest.mark.parametrize(
+    "kind, why",
+    [
+        ("caller-gated", "retired class"),
+        ("corpus", "not a bounded class"),
+        ("k-row", ""),
+        ("k-row", "   "),
+    ],
+)
+def test_bounded_broadcast_rejects_unknown_kind_or_empty_reason(
+    spark, kind, why
+):
+    from lms_erp_data_integration_spark.hints import bounded_broadcast
+
+    with pytest.raises(ValueError):
+        bounded_broadcast(spark.range(1), kind, why)
+
+
+def test_bounded_broadcast_emits_the_plain_hint(spark):
+    """The helper's join plans exactly like the F.broadcast control."""
+    from lms_erp_data_integration_spark.hints import bounded_broadcast
+
+    left = spark.range(10).withColumnRenamed("id", "k")
+    right = spark.range(5).withColumnRenamed("id", "k")
+    hinted = left.join(bounded_broadcast(right, "k-row", "5 rows"), "k")
+    plan = hinted._jdf.queryExecution().optimizedPlan().toString()
+    assert "strategy=broadcast" in plan
+
+    def masked(text):
+        return re.sub(r"#\d+L?", "#", text)
+
+    assert masked(plan) == masked(_hinted_control_plan(spark))

@@ -46,7 +46,7 @@ def test_changed_queries_enter_driver_window():
     stale = [
         n
         for n in plans.QUERIES
-        if manifest.get(n) != query_source_hash(n)
+        if manifest.get(n, {}).get("v2") != query_source_hash(n)
         and n not in registry.PRIORITY
     ]
     assert not stale, (
@@ -57,23 +57,22 @@ def test_changed_queries_enter_driver_window():
 
 
 def test_plan_source_changes_enter_driver_window():
-    """Bootstrap-restamp guard backstop (r14 ADVICE, medium): the v1
-    manifest (plan-function source + oracle, no closure walk) records
-    each query's own-source fingerprint as of its last stamp. Any
-    query whose v1 hash drifted must be in the current window — this
-    is what makes a ``--bootstrap`` v2 restamp after a shared-helper
-    change PROVABLY closure-only for the ~170 rows outside the
-    window, replacing the r14 round's manual byte-audit claim."""
+    """Bootstrap-restamp guard backstop: each manifest entry's v1 hash
+    (plan-function source + oracle, no closure walk) records the
+    query's own-source fingerprint as of its last stamp. Any query
+    whose v1 hash drifted must be in the current window — this is
+    what makes a ``--bootstrap`` v2 restamp after a shared-helper
+    change PROVABLY closure-only for the rows outside the window."""
     import json
 
-    from tests.query_hashes import V1_MANIFEST_PATH, query_v1_hash
+    from tests.query_hashes import MANIFEST_PATH, query_v1_hash
 
-    with open(V1_MANIFEST_PATH) as f:
+    with open(MANIFEST_PATH) as f:
         manifest = json.load(f)
     stale = [
         n
         for n in plans.QUERIES
-        if manifest.get(n) != query_v1_hash(n)
+        if manifest.get(n, {}).get("v1") != query_v1_hash(n)
         and n not in registry.PRIORITY
     ]
     assert not stale, (
