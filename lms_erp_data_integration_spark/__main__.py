@@ -17,6 +17,16 @@ raw provisioning-report directory (``RAW_DIR/<entity>.parquet|csv`` —
 the reference's E2 step), computes the seven diff updates, applies
 them in FK order through a CSV or Parquet sink under ``OUT_DIR``, and
 prints the per-entity run report.
+
+Every input is read with a declared schema (``engine.ERP_SCHEMAS``,
+``sources.csv.ENTITY_CSV_SCHEMAS``, and ``mirror.MIRROR_SCHEMAS`` for
+the mirrors read back), so no read runs a schema-inference job. A
+parquet file that lacks a declared column, or has it with another
+type, fails the night before anything is written; a CSV file's header
+must name the declared columns in order, and a value that does not
+parse as its declared type fails the read. The sink stages the seven
+updates concurrently under ``OUT_DIR/_staging`` and then publishes
+each into ``OUT_DIR/<name>`` in FK order.
 """
 
 from __future__ import annotations
@@ -26,15 +36,21 @@ import os
 import sys
 
 
-def _load_table(spark, directory: str, name: str):
+def _load_table(spark, directory: str, name: str, schema):
+    from .pipeline.mirror import read_declared_parquet
+
     pq = os.path.join(directory, f"{name}.parquet")
     csv = os.path.join(directory, f"{name}.csv")
     if os.path.exists(pq):
-        return spark.read.parquet(pq)
+        return read_declared_parquet(spark, pq, schema)
     if os.path.exists(csv):
-        return spark.read.option("header", True).option(
-            "inferSchema", True
-        ).csv(csv)
+        return (
+            spark.read.schema(schema)
+            .option("header", True)
+            .option("enforceSchema", False)
+            .option("mode", "FAILFAST")
+            .csv(csv)
+        )
     raise FileNotFoundError(f"no {name}.parquet or {name}.csv in {directory}")
 
 
@@ -68,38 +84,43 @@ def _cmd_query(args) -> int:
     return 0
 
 
-def _load_optional(spark, directory: str, name: str):
+def _load_optional(spark, directory: str, name: str, schema):
     try:
-        return _load_table(spark, directory, name)
+        return _load_table(spark, directory, name, schema)
     except FileNotFoundError:
         return None
 
 
-_ERP_TABLES = (
-    "reg_config", "faculty", "students", "courses", "sections", "enrollments",
-)
-
-
 def _cmd_sync(args) -> int:
     from .concurrency import run_legs
-    from .pipeline.engine import SyncEngine
+    from .pipeline.engine import ERP_SCHEMAS, SyncEngine
     from .pipeline.mirror import MIRROR_ENTITIES
-    from .pipeline.runner import csv_sink
+    from .pipeline.runner import FileSink, csv_sink
     from .session import get_spark
+    from .sources.csv import ENTITY_CSV_SCHEMAS
 
     spark = get_spark(app_name="sync")
-    # Each load runs its own schema-inference job; the loads are
-    # independent, so they overlap as legs of one run_legs call. A
-    # missing ERP table still raises; a missing raw report is skipped.
+    # Each load checks a footer and lists files on the driver; the
+    # loads are independent, so they overlap as legs of one run_legs
+    # call. A missing ERP table still raises; a missing raw report is
+    # skipped.
     raw_entities = MIRROR_ENTITIES if args.raw else ()
     frames = run_legs(
-        *(lambda n=n: _load_table(spark, args.erp, n) for n in _ERP_TABLES),
-        *(lambda e=e: _load_optional(spark, args.raw, e) for e in raw_entities),
+        *(
+            lambda n=n, s=s: _load_table(spark, args.erp, n, s)
+            for n, s in ERP_SCHEMAS.items()
+        ),
+        *(
+            lambda e=e: _load_optional(
+                spark, args.raw, e, ENTITY_CSV_SCHEMAS[e]
+            )
+            for e in raw_entities
+        ),
     )
-    erp = dict(zip(_ERP_TABLES, frames))
+    erp = dict(zip(ERP_SCHEMAS, frames))
     raw = {
         e: df
-        for e, df in zip(raw_entities, frames[len(_ERP_TABLES):])
+        for e, df in zip(raw_entities, frames[len(ERP_SCHEMAS):])
         if df is not None
     }
     engine = SyncEngine(
@@ -111,12 +132,7 @@ def _cmd_sync(args) -> int:
     if args.sink == "csv":
         sink = csv_sink(args.out)
     else:
-
-        def sink(name, df):
-            df.write.mode("overwrite").parquet(
-                os.path.join(args.out, name)
-            )
-
+        sink = FileSink(spark, args.out, "parquet")
     report = engine.run(sink)
     report.show(100, truncate=False)
     return 0

@@ -40,7 +40,7 @@ def pagerank_micros(
 
     Scale: the (often expensive) input edge lineage is evaluated ONCE
     — the edge list is persisted, out-degree (with multiplicity) is
-    folded into a persisted ``(src, dst, cnt, deg)`` adjacency via one
+    folded into a persisted ``(src, dst, deg)`` adjacency via one
     node-sized join up front, and every round's join derives from
     that. Rounds therefore do ONE node-sized join each instead of a
     degree join plus a rank join. The degree and rank tables are
@@ -65,7 +65,7 @@ def pagerank_micros(
     re-optimization of the deepening plan at AQE stage boundaries
     otherwise dominates the actual work.
     """
-    edges = edges.select("src", "dst").withColumn("cnt", F.lit(1).cast("long"))
+    edges = edges.select("src", "dst")
     # Out-degree (with multiplicity) folds into the persisted adjacency
     # via ONE node-sized join up front, so each round does a single
     # rank join instead of rank + degree.
@@ -74,7 +74,7 @@ def pagerank_micros(
         # consumers), then derive deg — partial-aggregated map-side to
         # node count, a narrow shuffle.
         edges = tracked_persist(edges.repartition("src"))
-        deg = edges.groupBy("src").agg(F.sum("cnt").alias("deg")).select(
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).select(
             F.col("src").alias("dsrc"), "deg"
         )
     else:
@@ -82,7 +82,7 @@ def pagerank_micros(
             F.col("node").alias("dsrc"), F.col("deg").cast("long").alias("deg")
         )
     adj = edges.join(deg, F.col("src") == F.col("dsrc")).select(
-        "src", "dst", "cnt", "deg"
+        "src", "dst", "deg"
     )
     if degrees is not None:
         adj = adj.repartition("src")
@@ -100,7 +100,7 @@ def pagerank_micros(
             adj.join(rank, F.col("src") == F.col("node"))
             .select(
                 F.col("dst").alias("node2"),
-                (F.col("cnt") * F.expr("r div deg")).alias("c"),
+                F.expr("r div deg").alias("c"),
             )
             .groupBy("node2")
             .agg(
@@ -157,7 +157,7 @@ def _iterate_with_dangling(
             adj.join(rank, F.col("src") == F.col("node"))
             .select(
                 F.col("dst").alias("node2"),
-                (F.col("cnt") * F.expr("r div deg")).alias("c"),
+                F.expr("r div deg").alias("c"),
             )
             .groupBy("node2")
             .agg(F.sum("c").alias("sc"))

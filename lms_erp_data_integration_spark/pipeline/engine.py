@@ -15,12 +15,15 @@ Lifecycle parity (SURVEY.md section 3):
 - E3 diff & apply: the seven update queries as broadcast anti-joins
   over ERP truth vs mirrors (``src/jenzabar.py:50-80``), applied in FK
   order with an engine-side run report (``src/canvas.py:107-162``).
-  The four mirror reads overlap. ``run`` then materializes the five
-  diffs once and concurrently, each checkpoint job observing its
-  change counts; the two CTL updates are projections of the
-  materialized courses and sections. The apply stays strictly
-  sequential in FK order, and the report is built from the observed
-  counts without running a Spark job.
+  The four mirror reads overlap and run no schema-inference job: they
+  declare ``MIRROR_SCHEMAS``. ``run`` then materializes the five diffs
+  once and concurrently, each checkpoint job observing its change
+  counts; the two CTL updates are projections of the materialized
+  courses and sections. A two-phase sink (``runner.FileSink``) writes
+  all seven updates concurrently to a staging area, then publishes
+  them in FK order, so FK order is the order in which the files
+  become visible. The report is built from the observed counts
+  without running a Spark job.
 
 Overlapped legs run on the shared ``concurrency.run_legs`` pool. A
 night's Spark jobs are small, so their cost is mostly fixed driver
@@ -37,14 +40,45 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.terms import resolve_term
 from ..operators import dq
 from ..operators.cleaning import ENTITY_SPECS, clean
 from ..operators.diff import missing_rows, snapshot_diff
 from ..runparams import RunParams
-from .mirror import MIRROR_ENTITIES, read_mirror, write_mirror
+from .mirror import (
+    MIRROR_ENTITIES,
+    MIRROR_SCHEMAS,
+    declared_schema,
+    mirror_table_path,
+    read_declared_parquet,
+    write_mirror,
+)
 from .runner import Sink, SyncPipeline, change_counts, observed_report
+
+_STR, _LONG = T.StringType(), T.LongType()
+_ROSTER = declared_schema(
+    id_num=_LONG, login_id=_STR, first_name=_STR, last_name=_STR,
+    yr_cde=_STR, trm_cde=_STR,
+)
+# The six ERP tables a night reads (FIXTURES.md section C), in the
+# order the CLI loads them.
+ERP_SCHEMAS: dict[str, T.StructType] = {
+    "reg_config": declared_schema(CUR_YR_DFLT=_STR, CUR_TRM_DFLT=_STR),
+    "faculty": _ROSTER,
+    "students": _ROSTER,
+    "courses": declared_schema(
+        crs_cde=_STR, title=_STR, yr_cde=_STR, trm_cde=_STR
+    ),
+    "sections": declared_schema(
+        crs_cde=_STR, section_id=_STR, name=_STR, yr_cde=_STR, trm_cde=_STR
+    ),
+    "enrollments": declared_schema(
+        course_id=_STR, user_id=_LONG, role=_STR, section_id=_STR,
+        yr_cde=_STR, trm_cde=_STR,
+    ),
+}
 
 # Mirror admission expectations (r4 verdict #8): the invariants the
 # cleaning specs are SUPPOSED to guarantee, re-checked fail-closed at
@@ -176,7 +210,11 @@ class SyncEngine:
         ))
 
     def mirror(self, entity: str) -> DataFrame:
-        df = read_mirror(self.spark, entity, self.mirror_path)
+        df = read_declared_parquet(
+            self.spark,
+            mirror_table_path(self.mirror_path, entity),
+            MIRROR_SCHEMAS[entity],
+        )
         if "yr_cde" in df.columns:
             df = self._term_slice(df)
         return df
@@ -196,8 +234,9 @@ class SyncEngine:
         from ..concurrency import run_legs
 
         p = self.params
-        # Each mirror read runs its own schema-inference job; the four
-        # reads are independent, so they overlap as run_legs legs.
+        # Each mirror read checks its footer and lists its files on the
+        # driver; the four reads are independent, so they overlap as
+        # run_legs legs.
         users_m, courses_m, sections_m, enrollments_m = run_legs(
             *(lambda e=e: self.mirror(e) for e in MIRROR_ENTITIES)
         )
@@ -280,14 +319,18 @@ class SyncEngine:
             for name, df in self.build_updates().items()
             if name not in _CTL_SOURCES
         }
-        observations = {name: Observation(f"sync_{name}") for name in diffs}
+        # enrollments (two broadcast builds and a checkpoint) is the
+        # longest leg: submitted first, it does not run alone in a
+        # second wave on the pool.
+        names = sorted(diffs, key=lambda name: name != "enrollments")
+        observations = {name: Observation(f"sync_{name}") for name in names}
         frames = run_legs(*(
-            lambda df=df, obs=observations[name]: df.observe(
+            lambda df=diffs[name], obs=observations[name]: df.observe(
                 obs, *change_counts(df)
             ).localCheckpoint(eager=True)
-            for name, df in diffs.items()
+            for name in names
         ))
-        SyncPipeline(sink).apply(_with_ctl_updates(dict(zip(diffs, frames))))
+        SyncPipeline(sink).apply(_with_ctl_updates(dict(zip(names, frames))))
         counts = {name: obs.get for name, obs in observations.items()}
         for ctl, source in _CTL_SOURCES.items():
             counts[ctl] = counts[source]

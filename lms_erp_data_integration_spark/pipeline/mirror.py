@@ -10,14 +10,88 @@ DELETE-then-INSERT, and mirrors are laid out ``partitionBy(yr_cde,
 trm_cde)`` so the per-term diff queries get partition pruning — the
 100 TB answer to the reference's ``WHERE yr_cde=? AND trm_cde=?``
 parameterization.
+
+A night reads its parquet inputs and mirrors through
+:func:`read_declared_parquet`, with ``MIRROR_SCHEMAS`` for the mirrors,
+so no read runs a schema-inference job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 MIRROR_ENTITIES = ("users", "courses", "sections", "enrollments")
 TERM_COLS = ("yr_cde", "trm_cde")
+
+
+def declared_schema(**columns: T.DataType) -> T.StructType:
+    """A schema of nullable columns, in keyword order."""
+    return T.StructType([T.StructField(c, t) for c, t in columns.items()])
+
+
+_STR, _LONG, _INT, _DATE = T.StringType(), T.LongType(), T.IntegerType(), T.DateType()
+
+# What ``clean`` writes for each entity (FIXTURES.md section B), in its
+# column order; ``tests/test_pipeline.py`` pins them to the cleaning
+# specs. Spark reads every file column back as nullable.
+MIRROR_SCHEMAS: dict[str, T.StructType] = {
+    "users": declared_schema(
+        id_num=_STR, canvas_user=_LONG, login_id=_STR, load_date=_DATE
+    ),
+    "courses": declared_schema(
+        canvas_course_id=_LONG, crs_cde=_STR, status=_STR,
+        yr_cde=_STR, trm_cde=_STR, load_date=_DATE,
+    ),
+    "sections": declared_schema(
+        crs_cde=_STR, section_id=_STR, name=_STR, status=_STR,
+        account_id=_LONG, canvas_section_id=_LONG, created_by_sis=_INT,
+        yr_cde=_STR, trm_cde=_STR, load_date=_DATE,
+    ),
+    "enrollments": declared_schema(
+        course_id=_STR, user_id=_LONG, role=_STR, section_id=_STR,
+        status=_STR, canvas_enrollment_id=_LONG, canvas_section_id=_LONG,
+        created_by_sis=_INT, yr_cde=_STR, trm_cde=_STR, load_date=_DATE,
+    ),
+}
+
+
+def read_declared_parquet(
+    spark: SparkSession, path: str, schema: T.StructType
+) -> DataFrame:
+    """Read a parquet file or hive-partitioned directory with a declared
+    schema, so no schema-inference job runs; columns the file has
+    beyond ``schema`` are dropped.
+
+    The footer of the first file is checked first, on the driver and
+    without a Spark job: a declared column that is missing, or whose
+    file type is not the declared one, raises ``ValueError`` naming the
+    path and the columns. Without the check a missing column would read as NULLs,
+    and a mismatched type would fail only in the first job that reads
+    it. Partition columns are checked by name only: their values come
+    from directory names, and Spark casts them to the declared type."""
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    found = ds.dataset(path, format="parquet", partitioning="hive")
+    missing = [f.name for f in schema if f.name not in found.schema.names]
+    if missing:
+        raise ValueError(f"{path} lacks declared columns {missing}")
+    # the first file's own columns; the rest of found.schema are
+    # partition columns
+    file_types = {
+        f.name: f.type for f in next(found.get_fragments()).physical_schema
+    }
+    mistyped = [
+        f"{f.name} is {file_types[f.name]},"
+        f" declared {f.dataType.simpleString()}"
+        for f in schema
+        if f.name in file_types
+        and file_types[f.name] != to_arrow_type(f.dataType)
+    ]
+    if mistyped:
+        raise ValueError(f"{path} has columns of another type: {mistyped}")
+    return spark.read.schema(schema).parquet(path)
 
 
 def mirror_table_name(entity: str) -> str:
@@ -30,9 +104,13 @@ def mirror_table_name(entity: str) -> str:
     return f"rpc_re_canvas_{entity}"
 
 
+def mirror_table_path(base_path: str, entity: str) -> str:
+    return f"{base_path.rstrip('/')}/{mirror_table_name(entity)}"
+
+
 def write_mirror(df: DataFrame, entity: str, base_path: str) -> str:
     """Snapshot-overwrite one mirror table; returns its path."""
-    path = f"{base_path.rstrip('/')}/{mirror_table_name(entity)}"
+    path = mirror_table_path(base_path, entity)
     writer = df.write.mode("overwrite")
     if all(c in df.columns for c in TERM_COLS):
         # dynamic mode: only the (yr_cde, trm_cde) partitions present in
@@ -46,7 +124,7 @@ def write_mirror(df: DataFrame, entity: str, base_path: str) -> str:
 
 
 def read_mirror(spark: SparkSession, entity: str, base_path: str) -> DataFrame:
-    return spark.read.parquet(f"{base_path.rstrip('/')}/{mirror_table_name(entity)}")
+    return spark.read.parquet(mirror_table_path(base_path, entity))
 
 
 def upsert_mirror(
@@ -70,7 +148,7 @@ def upsert_mirror(
     partition swap is atomic, the set of swaps is not. A lakehouse
     deployment would land this same plan on Delta/Iceberg MERGE.
     """
-    path = f"{base_path.rstrip('/')}/{mirror_table_name(entity)}"
+    path = mirror_table_path(base_path, entity)
     missing = [c for c in (*TERM_COLS, *key_cols) if c not in updates.columns]
     if missing:
         raise ValueError(f"updates missing required columns {missing}")

@@ -8,7 +8,10 @@ per-entity change statistics into a text report
 (``src/canvas.py:136-162``).
 
 Here the order is encoded as DAG edges over sink calls; each sink
-consumes a DataFrame. The run report is computed *before* applying
+consumes a DataFrame. A two-phase sink (:class:`FileSink`) splits each
+call: all updates are staged concurrently, then published in FK order,
+so FK order is the order in which they become visible. The run report
+is computed *before* applying
 (an improvement the reference cannot do — it only learns counts from
 Canvas's import response): per-entity row counts and, where a status
 column exists, add/delete splits.
@@ -17,9 +20,12 @@ column exists, add/delete splits.
 from __future__ import annotations
 
 from collections.abc import Callable, Mapping
+from typing import Protocol
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.csv import write_sis_csv
 
 # FK-dependency order (src/canvas.py:108-116)
 UPDATE_ORDER: tuple[str, ...] = (
@@ -150,6 +156,12 @@ class SyncPipeline:
     def apply(self, updates: Mapping[str, DataFrame]) -> list[str]:
         """Apply updates in dependency order; returns the order used.
 
+        A sink with a ``stage`` method (:class:`StagedSink`) first
+        stages every update, as legs of one ``run_legs`` call, and is
+        then called in FK order to publish them. If any staging fails,
+        the sink discards what was staged once every leg has finished,
+        nothing is published, and the first failure is raised.
+
         Unknown update names are rejected (mirrors the strictness of
         the reference's mirror-table allowlist)."""
         from pyspark.sql import Observation
@@ -157,9 +169,9 @@ class SyncPipeline:
         unknown = set(updates) - set(UPDATE_ORDER)
         if unknown:
             raise NameError(f"unknown update entities: {sorted(unknown)}")
-        applied = []
         self.observed = {}
         observations: dict[str, Observation] = {}
+        frames: dict[str, DataFrame] = {}
         for name in UPDATE_ORDER:
             if name in updates:
                 df = updates[name]
@@ -167,20 +179,103 @@ class SyncPipeline:
                     obs = Observation(f"sync_{name}")
                     df = df.observe(obs, *change_counts(df))
                     observations[name] = obs
-                self.sink(name, df)
-                applied.append(name)
+                frames[name] = df
+        if hasattr(self.sink, "stage"):
+            self._stage(frames)
+        for name, df in frames.items():
+            self.sink(name, df)
         for name, obs in observations.items():
             self.observed[name] = dict(obs.get)
-        return applied
+        return list(frames)
+
+    def _stage(self, frames: Mapping[str, DataFrame]) -> None:
+        from ..concurrency import run_legs
+
+        def leg(name: str, df: DataFrame) -> Exception | None:
+            try:
+                self.sink.stage(name, df)
+            except Exception as e:  # noqa: BLE001 - raised after every leg
+                return e
+            return None
+
+        failures = [
+            e
+            for e in run_legs(*(
+                lambda name=name, df=df: leg(name, df)
+                for name, df in frames.items()
+            ))
+            if e is not None
+        ]
+        if failures:
+            self.sink.discard()
+            raise failures[0]
 
 
-def csv_sink(base_path: str) -> Sink:
-    """Sink writing Canvas-SIS-import-shaped CSV files
-    (``src/jenzabar.py:64-66`` file layout)."""
+class StagedSink(Protocol):
+    """A two-phase sink. ``stage(name, df)`` writes an update where no
+    reader looks; calling the sink publishes it, staging it first if
+    it was never staged; ``discard()`` drops everything staged and not
+    yet published. ``stage`` may run concurrently for different
+    names."""
 
-    def _sink(name: str, df: DataFrame) -> None:
-        df.coalesce(1).write.mode("overwrite").option("header", True).csv(
-            f"{base_path.rstrip('/')}/{name}"
+    def stage(self, name: str, df: DataFrame) -> None: ...
+
+    def __call__(self, name: str, df: DataFrame) -> None: ...
+
+    def discard(self) -> None: ...
+
+
+class FileSink:
+    """Writes each update to ``<base>/<name>`` as Canvas-SIS-import
+    CSV (``src/jenzabar.py:64-66`` file layout) or as Parquet, in two
+    phases (:class:`StagedSink`): ``stage`` writes
+    ``<base>/_staging/<name>``; the call deletes ``<base>/<name>`` and
+    renames the staged directory into its place through the Hadoop
+    ``FileSystem`` of the path. ``_staging`` is removed once nothing
+    staged is left."""
+
+    def __init__(self, spark: SparkSession, base_path: str, fmt: str = "csv"):
+        if fmt not in ("csv", "parquet"):
+            raise ValueError(f"unknown sink format {fmt!r}")
+        self.spark = spark
+        self.base_path = base_path.rstrip("/")
+        self.fmt = fmt
+        self._staged: set[str] = set()
+
+    def _path(self, *parts: str):
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path
+        return jpath("/".join((self.base_path, *parts)))
+
+    def _fs(self):
+        return self._path().getFileSystem(
+            self.spark._jsc.hadoopConfiguration()
         )
 
-    return _sink
+    def stage(self, name: str, df: DataFrame) -> None:
+        path = f"{self.base_path}/_staging/{name}"
+        if self.fmt == "csv":
+            write_sis_csv(df, path)
+        else:
+            df.write.mode("overwrite").parquet(path)
+        self._staged.add(name)
+
+    def __call__(self, name: str, df: DataFrame) -> None:
+        if name not in self._staged:
+            self.stage(name, df)
+        fs, target = self._fs(), self._path(name)
+        fs.delete(target, True)
+        if not fs.rename(self._path("_staging", name), target):
+            raise OSError(f"could not publish {name} to {target.toString()}")
+        self._staged.discard(name)
+        if not self._staged:
+            fs.delete(self._path("_staging"), True)
+
+    def discard(self) -> None:
+        self._fs().delete(self._path("_staging"), True)
+        self._staged.clear()
+
+
+def csv_sink(base_path: str) -> FileSink:
+    """The CSV :class:`FileSink` under ``base_path``, on the active
+    session."""
+    return FileSink(SparkSession.active(), base_path, "csv")

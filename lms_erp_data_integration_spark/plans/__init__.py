@@ -32,7 +32,8 @@ registry.PRIORITY = [
     "sync_ctl_library_sections",
     "sync_clean_users",
     # changed: broadcast hints go through hints.bounded_broadcast, and
-    # rel_pagerank_parts no longer passes pagerank_micros a broadcast flag
+    # rel_pagerank_parts no longer passes pagerank_micros a broadcast
+    # flag; pagerank_micros no longer carries a constant cnt column
     "llm_corpus_curate",
     "llm_corpus_rebalance",
     "llm_domain_mix_doremi",

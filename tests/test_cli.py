@@ -8,6 +8,9 @@ import io
 import os
 from contextlib import redirect_stdout
 
+import pytest
+from pyspark.sql import functions as F
+
 from lms_erp_data_integration_spark.__main__ import main
 
 
@@ -83,9 +86,11 @@ def _write_sync_inputs(spark, tmp_path):
     return erp_dir, raw_dir
 
 
-def _run_sync(erp_dir, raw_dir, mirror_dir, out_dir) -> str:
-    """Run the ``sync`` command with a CSV sink; returns what it printed."""
+def _run_sync(erp_dir, raw_dir, mirror_dir, out_dir, sink="csv") -> str:
+    """Run the ``sync`` command, without ``--raw`` when ``raw_dir`` is
+    None; returns what it printed."""
     buf = io.StringIO()
+    raw = [] if raw_dir is None else ["--raw", str(raw_dir)]
     with redirect_stdout(buf):
         rc = main(
             [
@@ -93,8 +98,8 @@ def _run_sync(erp_dir, raw_dir, mirror_dir, out_dir) -> str:
                 "--erp", str(erp_dir),
                 "--mirror", str(mirror_dir),
                 "--out", str(out_dir),
-                "--raw", str(raw_dir),
-                "--sink", "csv",
+                *raw,
+                "--sink", sink,
             ]
         )
     assert rc == 0
@@ -183,6 +188,103 @@ def test_cli_sync_overlap_matches_serial(spark, tmp_path):
     csvs, mirrors, _ = threaded
     assert csvs["student_users"][1]  # the diff found the missing student
     assert all(mirrors.values())  # every mirror was written
+
+
+def _rewrite(spark, path, change):
+    """Replace the parquet table at ``path`` by ``change`` of it."""
+    import shutil
+
+    df = change(spark.read.parquet(str(path))).localCheckpoint(eager=True)
+    shutil.rmtree(path)
+    df.write.parquet(str(path))
+
+
+@pytest.mark.parametrize(
+    "where, column",
+    [("erp", "login_id"), ("raw", "login_id"), ("mirror", "canvas_user")],
+)
+def test_cli_sync_rejects_a_file_without_a_declared_column(
+    spark, tmp_path, where, column
+):
+    """The faculty ERP table, the raw users report or the users mirror
+    without one declared column fails the night with an error naming
+    that column, instead of reading it as NULLs."""
+    erp_dir, raw_dir = _write_sync_inputs(spark, tmp_path)
+    mirror_dir = tmp_path / "mirror"
+    if where == "mirror":
+        _run_sync(erp_dir, raw_dir, mirror_dir, tmp_path / "out0")
+        path = mirror_dir / "rpc_re_canvas_users"
+        raw_dir = None  # no refresh: the night reads the mirror back
+    else:
+        table = "faculty" if where == "erp" else "users"
+        path = tmp_path / where / f"{table}.parquet"
+    _rewrite(spark, path, lambda df: df.drop(column))
+    with pytest.raises(ValueError, match=f"lacks declared columns.*{column}"):
+        _run_sync(erp_dir, raw_dir, mirror_dir, tmp_path / "out")
+
+
+@pytest.mark.parametrize(
+    "where, table, column",
+    [("erp", "enrollments", "user_id"), ("raw", "sections", "created_by_sis")],
+)
+def test_cli_sync_rejects_a_column_of_another_type_before_writing(
+    spark, tmp_path, where, table, column
+):
+    """A column stored as string where the schema declares long or
+    boolean fails the night at the footer check, before any mirror or
+    update file is written."""
+    erp_dir, raw_dir = _write_sync_inputs(spark, tmp_path)
+    _rewrite(
+        spark,
+        tmp_path / where / f"{table}.parquet",
+        lambda df: df.withColumn(column, F.col(column).cast("string")),
+    )
+    mirror_dir, out_dir = tmp_path / "mirror", tmp_path / "out"
+    with pytest.raises(ValueError, match=f"{column} is string"):
+        _run_sync(erp_dir, raw_dir, mirror_dir, out_dir)
+    assert not mirror_dir.exists()
+    assert not out_dir.exists()
+
+
+def test_cli_sync_reads_csv_tables_and_rejects_a_mismatched_header(
+    spark, tmp_path
+):
+    import glob
+    import shutil
+
+    erp_dir, raw_dir = _write_sync_inputs(spark, tmp_path)
+    shutil.rmtree(erp_dir / "faculty.parquet")
+    header = "id_num,login_id,first_name,last_name,yr_cde,trm_cde"
+    rows = "2001,prof.a,Ada,Prof,21,1S\n2002,prof.b,Bob,Prof,21,1S\n"
+    csv = erp_dir / "faculty.csv"
+    csv.write_text(header + "\n" + rows)
+    out_dir = tmp_path / "out"
+    _run_sync(erp_dir, raw_dir, tmp_path / "mirror", out_dir)
+    (path,) = glob.glob(str(out_dir / "faculty_users" / "*.csv"))
+    with open(path) as f:
+        assert f.read().splitlines()[1:] == ["2002,prof.b,Bob,Prof,active"]
+
+    csv.write_text(header.replace("login_id", "login") + "\n" + rows)
+    with pytest.raises(Exception, match="CSV header does not conform"):
+        _run_sync(erp_dir, raw_dir, tmp_path / "mirror", tmp_path / "out2")
+
+
+def test_cli_sync_parquet_sink_writes_the_seven_updates(spark, tmp_path):
+    from lms_erp_data_integration_spark.pipeline.runner import UPDATE_ORDER
+
+    erp_dir, raw_dir = _write_sync_inputs(spark, tmp_path)
+    out_dir = tmp_path / "out"
+    _run_sync(erp_dir, raw_dir, tmp_path / "mirror", out_dir, sink="parquet")
+    assert sorted(p.name for p in out_dir.iterdir()) == sorted(UPDATE_ORDER)
+    got = {
+        name: sorted(map(tuple, spark.read.parquet(str(out_dir / name)).collect()))
+        for name in UPDATE_ORDER
+    }
+    assert got["student_users"] == [(1002, "stu.b", "Bea", "Stu", "active")]
+    assert got["enrollments"] == [("CS200", 1002, "student", "S1", "active")]
+    assert got["ctl_library_sections"] == [
+        ("CTL-S1", "CTL-CS200", "Lab", "active")
+    ]
 
 
 def test_cli_query_json_output(spark, capsys):

@@ -158,3 +158,89 @@ def test_pipeline_observed_metrics(spark):
         "n_active": 1,
         "n_deleted": 0,
     }
+
+
+def test_mirror_schemas_match_the_cleaning_specs(spark):
+    """The declared mirror read schemas are exactly what ``clean``
+    writes from an empty raw report, column for column and type for
+    type (nullability aside: Spark reads file columns as nullable)."""
+    from lms_erp_data_integration_spark.operators.cleaning import (
+        ENTITY_SPECS,
+        clean,
+    )
+    from lms_erp_data_integration_spark.pipeline.mirror import (
+        MIRROR_ENTITIES,
+        MIRROR_SCHEMAS,
+    )
+    from lms_erp_data_integration_spark.runparams import RunParams
+    from lms_erp_data_integration_spark.sources.csv import ENTITY_CSV_SCHEMAS
+
+    params = RunParams(term_id="211S")
+
+    def columns(schema):
+        return [(f.name, f.dataType) for f in schema]
+
+    assert set(MIRROR_SCHEMAS) == set(MIRROR_ENTITIES)
+    for entity in MIRROR_ENTITIES:
+        raw = spark.createDataFrame([], ENTITY_CSV_SCHEMAS[entity])
+        cleaned = clean(raw, ENTITY_SPECS[entity], params)
+        assert columns(MIRROR_SCHEMAS[entity]) == columns(cleaned.schema), entity
+
+
+class _RecordingStagedSink:
+    def __init__(self):
+        self.events: list[tuple[str, str]] = []
+
+    def stage(self, name, df):
+        self.events.append(("stage", name))
+
+    def __call__(self, name, df):
+        self.events.append(("publish", name))
+
+    def discard(self):
+        self.events.append(("discard", ""))
+
+
+def test_pipeline_stages_everything_before_publishing_in_fk_order(spark):
+    df = spark.createDataFrame([(1,)], "x long")
+    sink = _RecordingStagedSink()
+    applied = SyncPipeline(sink).apply({name: df for name in UPDATE_ORDER[::-1]})
+    assert applied == list(UPDATE_ORDER)
+    kinds = [kind for kind, _ in sink.events]
+    assert kinds == ["stage"] * 7 + ["publish"] * 7
+    assert sorted(name for _, name in sink.events[:7]) == sorted(UPDATE_ORDER)
+    assert [name for _, name in sink.events[7:]] == list(UPDATE_ORDER)
+
+
+def test_file_sink_staging_failure_publishes_nothing(spark, tmp_path):
+    """One update fails while it is staged: none of the seven is
+    published, and no ``_staging`` is left."""
+    from lms_erp_data_integration_spark.pipeline.runner import FileSink
+
+    ok = spark.createDataFrame([("a",)], "course_id string")
+    boom = spark.range(1).select(
+        F.raise_error(F.lit("boom")).cast("string").alias("x")
+    )
+    updates = {name: ok for name in UPDATE_ORDER}
+    updates["sections"] = boom
+    out = tmp_path / "out"
+    with pytest.raises(Exception, match="boom"):
+        SyncPipeline(FileSink(spark, str(out), "csv")).apply(updates)
+    assert [p.name for p in out.iterdir()] == []
+
+
+def test_file_sink_publishes_a_call_it_never_staged(spark, tmp_path):
+    """A plain call stages and publishes in one go, replacing what the
+    name held, and leaves no ``_staging`` behind."""
+    import glob
+
+    from lms_erp_data_integration_spark.pipeline.runner import FileSink
+
+    out = tmp_path / "out"
+    sink = FileSink(spark, str(out), "csv")
+    sink("courses", spark.createDataFrame([("old",)], "course_id string"))
+    sink("courses", spark.createDataFrame([("new",)], "course_id string"))
+    assert sorted(p.name for p in out.iterdir()) == ["courses"]
+    (path,) = glob.glob(str(out / "courses" / "*.csv"))
+    with open(path) as f:
+        assert f.read().splitlines() == ["course_id", "new"]
