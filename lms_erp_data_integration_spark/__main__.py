@@ -18,15 +18,15 @@ the reference's E2 step), computes the seven diff updates, applies
 them in FK order through a CSV or Parquet sink under ``OUT_DIR``, and
 prints the per-entity run report.
 
-Every input is read with a declared schema (``engine.ERP_SCHEMAS``,
-``sources.csv.ENTITY_CSV_SCHEMAS``, and ``mirror.MIRROR_SCHEMAS`` for
-the mirrors read back), so no read runs a schema-inference job. A
-parquet file that lacks a declared column, or has it with another
-type, fails the night before anything is written; a CSV file's header
-must name the declared columns in order, and a value that does not
-parse as its declared type fails the read. The sink stages the seven
-updates concurrently under ``OUT_DIR/_staging`` and then publishes
-each into ``OUT_DIR/<name>`` in FK order.
+Every input is read with a declared schema (``sources.schemas``), so
+no read runs a schema-inference job. Columns are matched by name, and
+a file's extra columns are dropped. A file that lacks a declared
+column, or a parquet file that has it with a type Spark cannot read
+into the declared one, fails the night before anything is written; a
+CSV value that does not parse as its declared type fails the read.
+The sink stages the seven updates concurrently under
+``OUT_DIR/_staging`` and then publishes each into ``OUT_DIR/<name>``
+in FK order.
 """
 
 from __future__ import annotations
@@ -38,19 +38,14 @@ import sys
 
 def _load_table(spark, directory: str, name: str, schema):
     from .pipeline.mirror import read_declared_parquet
+    from .sources.csv import read_declared_csv
 
     pq = os.path.join(directory, f"{name}.parquet")
     csv = os.path.join(directory, f"{name}.csv")
     if os.path.exists(pq):
         return read_declared_parquet(spark, pq, schema)
     if os.path.exists(csv):
-        return (
-            spark.read.schema(schema)
-            .option("header", True)
-            .option("enforceSchema", False)
-            .option("mode", "FAILFAST")
-            .csv(csv)
-        )
+        return read_declared_csv(spark, csv, schema)
     raise FileNotFoundError(f"no {name}.parquet or {name}.csv in {directory}")
 
 
@@ -93,11 +88,11 @@ def _load_optional(spark, directory: str, name: str, schema):
 
 def _cmd_sync(args) -> int:
     from .concurrency import run_legs
-    from .pipeline.engine import ERP_SCHEMAS, SyncEngine
+    from .pipeline.engine import SyncEngine
     from .pipeline.mirror import MIRROR_ENTITIES
     from .pipeline.runner import FileSink, csv_sink
     from .session import get_spark
-    from .sources.csv import ENTITY_CSV_SCHEMAS
+    from .sources.schemas import ENTITY_CSV_SCHEMAS, ERP_SCHEMAS
 
     spark = get_spark(app_name="sync")
     # Each load checks a footer and lists files on the driver; the

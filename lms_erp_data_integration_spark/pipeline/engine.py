@@ -16,9 +16,10 @@ Lifecycle parity (SURVEY.md section 3):
   over ERP truth vs mirrors (``src/jenzabar.py:50-80``), applied in FK
   order with an engine-side run report (``src/canvas.py:107-162``).
   The four mirror reads overlap and run no schema-inference job: they
-  declare ``MIRROR_SCHEMAS``. ``run`` then materializes the five diffs
-  once and concurrently, each checkpoint job observing its change
-  counts; the two CTL updates are projections of the materialized
+  declare ``sources.schemas.MIRROR_SCHEMAS``. ``run`` then
+  materializes the five diffs once and concurrently, each checkpoint
+  job observing its change counts; the two CTL updates are
+  projections of the materialized
   courses and sections. A two-phase sink (``runner.FileSink``) writes
   all seven updates concurrently to a staging area, then publishes
   them in FK order, so FK order is the order in which the files
@@ -40,45 +41,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.terms import resolve_term
 from ..operators import dq
 from ..operators.cleaning import ENTITY_SPECS, clean
 from ..operators.diff import missing_rows, snapshot_diff
 from ..runparams import RunParams
+from ..sources.schemas import MIRROR_SCHEMAS
 from .mirror import (
     MIRROR_ENTITIES,
-    MIRROR_SCHEMAS,
-    declared_schema,
     mirror_table_path,
     read_declared_parquet,
     write_mirror,
 )
 from .runner import Sink, SyncPipeline, change_counts, observed_report
-
-_STR, _LONG = T.StringType(), T.LongType()
-_ROSTER = declared_schema(
-    id_num=_LONG, login_id=_STR, first_name=_STR, last_name=_STR,
-    yr_cde=_STR, trm_cde=_STR,
-)
-# The six ERP tables a night reads (FIXTURES.md section C), in the
-# order the CLI loads them.
-ERP_SCHEMAS: dict[str, T.StructType] = {
-    "reg_config": declared_schema(CUR_YR_DFLT=_STR, CUR_TRM_DFLT=_STR),
-    "faculty": _ROSTER,
-    "students": _ROSTER,
-    "courses": declared_schema(
-        crs_cde=_STR, title=_STR, yr_cde=_STR, trm_cde=_STR
-    ),
-    "sections": declared_schema(
-        crs_cde=_STR, section_id=_STR, name=_STR, yr_cde=_STR, trm_cde=_STR
-    ),
-    "enrollments": declared_schema(
-        course_id=_STR, user_id=_LONG, role=_STR, section_id=_STR,
-        yr_cde=_STR, trm_cde=_STR,
-    ),
-}
 
 # Mirror admission expectations (r4 verdict #8): the invariants the
 # cleaning specs are SUPPOSED to guarantee, re-checked fail-closed at

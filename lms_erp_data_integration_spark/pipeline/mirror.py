@@ -12,7 +12,7 @@ trm_cde)`` so the per-term diff queries get partition pruning — the
 parameterization.
 
 A night reads its parquet inputs and mirrors through
-:func:`read_declared_parquet`, with ``MIRROR_SCHEMAS`` for the mirrors,
+:func:`read_declared_parquet`, with the schemas of ``sources.schemas``,
 so no read runs a schema-inference job.
 """
 
@@ -25,35 +25,21 @@ MIRROR_ENTITIES = ("users", "courses", "sections", "enrollments")
 TERM_COLS = ("yr_cde", "trm_cde")
 
 
-def declared_schema(**columns: T.DataType) -> T.StructType:
-    """A schema of nullable columns, in keyword order."""
-    return T.StructType([T.StructField(c, t) for c, t in columns.items()])
+def _reads_as(file_type, declared) -> bool:
+    """Whether Spark reads a parquet column of arrow type ``file_type``
+    into a column of arrow type ``declared`` without loss: the same
+    type, a narrower integer or float, or a large string as a string."""
+    import pyarrow as pa
 
-
-_STR, _LONG, _INT, _DATE = T.StringType(), T.LongType(), T.IntegerType(), T.DateType()
-
-# What ``clean`` writes for each entity (FIXTURES.md section B), in its
-# column order; ``tests/test_pipeline.py`` pins them to the cleaning
-# specs. Spark reads every file column back as nullable.
-MIRROR_SCHEMAS: dict[str, T.StructType] = {
-    "users": declared_schema(
-        id_num=_STR, canvas_user=_LONG, login_id=_STR, load_date=_DATE
-    ),
-    "courses": declared_schema(
-        canvas_course_id=_LONG, crs_cde=_STR, status=_STR,
-        yr_cde=_STR, trm_cde=_STR, load_date=_DATE,
-    ),
-    "sections": declared_schema(
-        crs_cde=_STR, section_id=_STR, name=_STR, status=_STR,
-        account_id=_LONG, canvas_section_id=_LONG, created_by_sis=_INT,
-        yr_cde=_STR, trm_cde=_STR, load_date=_DATE,
-    ),
-    "enrollments": declared_schema(
-        course_id=_STR, user_id=_LONG, role=_STR, section_id=_STR,
-        status=_STR, canvas_enrollment_id=_LONG, canvas_section_id=_LONG,
-        created_by_sis=_INT, yr_cde=_STR, trm_cde=_STR, load_date=_DATE,
-    ),
-}
+    if file_type == declared:
+        return True
+    if pa.types.is_integer(file_type) and pa.types.is_signed_integer(declared):
+        # an unsigned integer needs one more bit as a signed one
+        unsigned = pa.types.is_unsigned_integer(file_type)
+        return file_type.bit_width + unsigned <= declared.bit_width
+    if pa.types.is_floating(file_type) and pa.types.is_floating(declared):
+        return file_type.bit_width <= declared.bit_width
+    return pa.types.is_large_string(file_type) and pa.types.is_string(declared)
 
 
 def read_declared_parquet(
@@ -63,34 +49,44 @@ def read_declared_parquet(
     schema, so no schema-inference job runs; columns the file has
     beyond ``schema`` are dropped.
 
-    The footer of the first file is checked first, on the driver and
-    without a Spark job: a declared column that is missing, or whose
-    file type is not the declared one, raises ``ValueError`` naming the
-    path and the columns. Without the check a missing column would read as NULLs,
-    and a mismatched type would fail only in the first job that reads
-    it. Partition columns are checked by name only: their values come
-    from directory names, and Spark casts them to the declared type."""
+    Every file's footer is checked first, on the driver and without a
+    Spark job: a declared column that a file lacks, or whose type Spark
+    cannot read into the declared one (``_reads_as``), raises
+    ``ValueError`` naming the file and the columns. Without the check a
+    missing column would read as NULLs, and a mismatched type would
+    fail only in the first job that reads it. Partition columns are
+    checked by name only: their values come from directory names, and
+    Spark casts them to the declared type. The footers are read with
+    pyarrow, so ``path`` must be local: pyarrow cannot open
+    Hadoop-only URIs such as ``s3a://``."""
     import pyarrow.dataset as ds
     from pyspark.sql.pandas.types import to_arrow_type
 
     found = ds.dataset(path, format="parquet", partitioning="hive")
-    missing = [f.name for f in schema if f.name not in found.schema.names]
-    if missing:
-        raise ValueError(f"{path} lacks declared columns {missing}")
-    # the first file's own columns; the rest of found.schema are
-    # partition columns
-    file_types = {
-        f.name: f.type for f in next(found.get_fragments()).physical_schema
-    }
-    mistyped = [
-        f"{f.name} is {file_types[f.name]},"
-        f" declared {f.dataType.simpleString()}"
-        for f in schema
-        if f.name in file_types
-        and file_types[f.name] != to_arrow_type(f.dataType)
-    ]
-    if mistyped:
-        raise ValueError(f"{path} has columns of another type: {mistyped}")
+    partition_cols = set(found.partitioning.schema.names)
+    fragments = list(found.get_fragments())
+    if not fragments:
+        raise ValueError(f"{path} holds no parquet files")
+    for fragment in fragments:
+        file_types = {f.name: f.type for f in fragment.physical_schema}
+        missing = [
+            f.name
+            for f in schema
+            if f.name not in file_types and f.name not in partition_cols
+        ]
+        if missing:
+            raise ValueError(f"{fragment.path} lacks declared columns {missing}")
+        mistyped = [
+            f"{f.name} is {file_types[f.name]},"
+            f" declared {f.dataType.simpleString()}"
+            for f in schema
+            if f.name in file_types
+            and not _reads_as(file_types[f.name], to_arrow_type(f.dataType))
+        ]
+        if mistyped:
+            raise ValueError(
+                f"{fragment.path} has columns of another type: {mistyped}"
+            )
     return spark.read.schema(schema).parquet(path)
 
 

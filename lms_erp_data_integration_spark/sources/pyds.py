@@ -38,7 +38,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from .csv import ENTITY_CSV_SCHEMAS
+from .schemas import ENTITY_CSV_SCHEMAS
 from .rest import REPORT_POLL_SECONDS, ReportSource, Transport
 
 

@@ -265,8 +265,67 @@ def test_cli_sync_reads_csv_tables_and_rejects_a_mismatched_header(
         assert f.read().splitlines()[1:] == ["2002,prof.b,Bob,Prof,active"]
 
     csv.write_text(header.replace("login_id", "login") + "\n" + rows)
-    with pytest.raises(Exception, match="CSV header does not conform"):
+    with pytest.raises(ValueError, match=r"lacks declared columns \['login_id'\]"):
         _run_sync(erp_dir, raw_dir, tmp_path / "mirror", tmp_path / "out2")
+
+
+def test_cli_sync_reads_a_csv_report_by_column_name(spark, tmp_path):
+    """A raw report CSV whose columns come in another order and include
+    one the schema does not declare, as real provisioning reports do,
+    refreshes the same mirror as the parquet report it replaces."""
+    import shutil
+
+    from lms_erp_data_integration_spark.pipeline.mirror import read_mirror
+
+    erp_dir, raw_dir = _write_sync_inputs(spark, tmp_path)
+
+    def users_mirror(arm):
+        mirror_dir = tmp_path / arm / "mirror"
+        _run_sync(erp_dir, raw_dir, mirror_dir, tmp_path / arm / "out")
+        users = read_mirror(spark, "users", str(mirror_dir))
+        return sorted(map(tuple, users.collect()))
+
+    from_parquet = users_mirror("parquet")
+    shutil.rmtree(raw_dir / "users.parquet")
+    (raw_dir / "users.csv").write_text(
+        "canvas_user_id,user_id,login_id,sortable_name\n"
+        '11,1001,stu.a,"Stu, Al"\n'
+        '12,2001,prof.a,"Prof, Ada"\n'
+    )
+    assert users_mirror("csv") == from_parquet
+    assert len(from_parquet) == 2
+
+
+def test_cli_sync_reads_narrower_integer_columns(spark, tmp_path):
+    """ERP id columns stored as int rather than the declared long are
+    read as long: the night writes what it writes from long columns."""
+    import glob
+
+    from lms_erp_data_integration_spark.pipeline.runner import UPDATE_ORDER
+
+    erp_dir, raw_dir = _write_sync_inputs(spark, tmp_path)
+
+    def updates(arm):
+        out_dir = tmp_path / arm / "out"
+        _run_sync(erp_dir, raw_dir, tmp_path / arm / "mirror", out_dir)
+        got = {}
+        for name in UPDATE_ORDER:
+            (path,) = glob.glob(str(out_dir / name / "*.csv"))
+            with open(path) as f:
+                got[name] = sorted(f.read().splitlines())
+        return got
+
+    as_long = updates("long")
+    for table, column in (
+        ("faculty", "id_num"), ("students", "id_num"), ("enrollments", "user_id")
+    ):
+        _rewrite(
+            spark,
+            erp_dir / f"{table}.parquet",
+            lambda df, c=column: df.withColumn(c, F.col(c).cast("int")),
+        )
+    assert updates("int") == as_long
+    assert as_long["student_users"][0].startswith("1002,")
 
 
 def test_cli_sync_parquet_sink_writes_the_seven_updates(spark, tmp_path):

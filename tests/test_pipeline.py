@@ -168,12 +168,12 @@ def test_mirror_schemas_match_the_cleaning_specs(spark):
         ENTITY_SPECS,
         clean,
     )
-    from lms_erp_data_integration_spark.pipeline.mirror import (
-        MIRROR_ENTITIES,
+    from lms_erp_data_integration_spark.pipeline.mirror import MIRROR_ENTITIES
+    from lms_erp_data_integration_spark.runparams import RunParams
+    from lms_erp_data_integration_spark.sources.schemas import (
+        ENTITY_CSV_SCHEMAS,
         MIRROR_SCHEMAS,
     )
-    from lms_erp_data_integration_spark.runparams import RunParams
-    from lms_erp_data_integration_spark.sources.csv import ENTITY_CSV_SCHEMAS
 
     params = RunParams(term_id="211S")
 
@@ -185,6 +185,27 @@ def test_mirror_schemas_match_the_cleaning_specs(spark):
         raw = spark.createDataFrame([], ENTITY_CSV_SCHEMAS[entity])
         cleaned = clean(raw, ENTITY_SPECS[entity], params)
         assert columns(MIRROR_SCHEMAS[entity]) == columns(cleaned.schema), entity
+
+
+def test_declared_parquet_checks_every_file(spark, tmp_path):
+    """The footer check reads every file of a directory, not just the
+    first: a later file with a column of another type fails the read,
+    and the error names that file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from lms_erp_data_integration_spark.pipeline.mirror import (
+        read_declared_parquet,
+    )
+
+    schema = T.StructType([T.StructField("id_num", T.LongType())])
+    pq.write_table(pa.table({"id_num": pa.array([1], pa.int32())}),
+                   tmp_path / "a.parquet")
+    assert read_declared_parquet(spark, str(tmp_path), schema).collect() == [(1,)]
+    pq.write_table(pa.table({"id_num": ["2"]}), tmp_path / "b.parquet")
+    with pytest.raises(ValueError, match=r"b\.parquet has .*id_num is string"):
+        read_declared_parquet(spark, str(tmp_path), schema)
 
 
 class _RecordingStagedSink:
