@@ -23,9 +23,8 @@ the r14 code used:
   deliberately small (2-3 legs in flight is what fills a tail — guide
   §2.6) and its threads live for the process.
 
-The pool class is looked up through ``concurrent.futures`` at call
-time, and a pool built from a patched class is NOT cached.
-:func:`serial_legs` swaps in the one serial inline executor; the
+While :func:`serial_legs` is active, :func:`run_legs` calls the same
+wrapped legs inline on the calling thread instead; the
 overlap-neutrality tests and the ``serial`` arm of ``scripts/ab.py``
 use it to pin that threaded and sequential execution produce
 bit-identical rows.
@@ -41,16 +40,8 @@ _POOL_WORKERS = 4
 
 _pool = None
 
-
-def _executor():
-    """The shared pool, rebuilt only when the executor CLASS changed
-    since the last call (i.e. :func:`serial_legs` swapped in the serial
-    inline executor, or swapped it back out)."""
-    global _pool
-    cls = cf.ThreadPoolExecutor
-    if _pool is None or type(_pool) is not cls:
-        _pool = cls(max_workers=_POOL_WORKERS)
-    return _pool
+# set by serial_legs: run_legs runs its legs inline
+_serial = False
 
 
 def run_legs(*fns: Callable):
@@ -84,52 +75,23 @@ def run_legs(*fns: Callable):
             return leg
 
         legs = [restoring(fn) for fn in fns]
-    pool = _executor()
-    futs = [pool.submit(leg) for leg in legs]
+    if _serial:
+        return [leg() for leg in legs]
+    global _pool
+    if _pool is None:
+        _pool = cf.ThreadPoolExecutor(max_workers=_POOL_WORKERS)
+    futs = [_pool.submit(leg) for leg in legs]
     return [f.result() for f in futs]
-
-
-class _SerialFuture:
-    def __init__(self, fn, *a, **kw):
-        try:
-            self._res, self._exc = fn(*a, **kw), None
-        except BaseException as e:  # noqa: BLE001 - re-raised by result()
-            self._res, self._exc = None, e
-
-    def result(self):
-        if self._exc is not None:
-            raise self._exc
-        return self._res
-
-
-class _SerialExecutor:
-    """Drop-in for ``concurrent.futures.ThreadPoolExecutor`` that runs
-    each submitted callable inline on the calling thread."""
-
-    def __init__(self, *a, **kw):
-        pass
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        return False
-
-    def submit(self, fn, *a, **kw):
-        return _SerialFuture(fn, *a, **kw)
-
-    def map(self, fn, *iterables):
-        return list(map(fn, *iterables))
 
 
 @contextlib.contextmanager
 def serial_legs():
     """Run every :func:`run_legs` leg inline, in argument order, on the
-    calling thread until the block exits; the real pool class is put
-    back afterwards, also when the block raises."""
-    real = cf.ThreadPoolExecutor
-    cf.ThreadPoolExecutor = _SerialExecutor
+    calling thread until the block exits; a failing leg raises at once,
+    so later legs of that call do not run."""
+    global _serial
+    before, _serial = _serial, True
     try:
         yield
     finally:
-        cf.ThreadPoolExecutor = real
+        _serial = before

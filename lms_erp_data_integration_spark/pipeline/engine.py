@@ -16,15 +16,12 @@ Lifecycle parity (SURVEY.md section 3):
   over ERP truth vs mirrors (``src/jenzabar.py:50-80``), applied in FK
   order with an engine-side run report (``src/canvas.py:107-162``).
   The four mirror reads overlap and run no schema-inference job: they
-  declare ``sources.schemas.MIRROR_SCHEMAS``. ``run`` then
-  materializes the five diffs once and concurrently, each checkpoint
-  job observing its change counts; the two CTL updates are
-  projections of the materialized
-  courses and sections. A two-phase sink (``runner.FileSink``) writes
-  all seven updates concurrently to a staging area, then publishes
-  them in FK order, so FK order is the order in which the files
-  become visible. The report is built from the observed counts
-  without running a Spark job.
+  declare ``sources.schemas.MIRROR_SCHEMAS``. A two-phase sink
+  (``runner.FileSink``) writes all seven updates concurrently to a
+  staging area, then publishes them in FK order, so FK order is the
+  order in which the files become visible. Each staging write also
+  observes its update's change counts, and the report is built from
+  them without running a Spark job.
 
 Overlapped legs run on the shared ``concurrency.run_legs`` pool. A
 night's Spark jobs are small, so their cost is mostly fixed driver
@@ -32,12 +29,15 @@ and scheduler latency; independent legs pay it once instead of once
 each.
 
 Differences by design: no CSV dataflow between stages (DataFrames
-end-to-end; the diffs are checkpointed in executor memory, not written
-out), statistics computed *before* apply, and every per-term
-read hits a ``yr_cde/trm_cde`` partition (pruning at 100 TB).
+end-to-end), and every per-term read hits a ``yr_cde/trm_cde``
+partition (pruning at 100 TB). Like the reference, the run learns its
+counts from the apply; the reference reads them from Canvas's import
+responses.
 """
 
 from __future__ import annotations
+
+import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,7 +54,7 @@ from .mirror import (
     read_declared_parquet,
     write_mirror,
 )
-from .runner import Sink, SyncPipeline, change_counts, observed_report
+from .runner import Sink, SyncPipeline
 
 # Mirror admission expectations (r4 verdict #8): the invariants the
 # cleaning specs are SUPPOSED to guarantee, re-checked fail-closed at
@@ -104,41 +104,14 @@ def convert_term_id(canvas_terms: DataFrame, sis_term_id: str) -> int | None:
     return None if row is None else row["id"]
 
 
-# CTL library update -> the diff it projects, 1:1 with ``status`` kept
-_CTL_SOURCES = {
-    "ctl_library_courses": "courses",
-    "ctl_library_sections": "sections",
-}
-
-
-def _with_ctl_updates(diffs: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """The five diffs plus the two CTL library updates projected from
-    its ``courses`` and ``sections``."""
-    courses, sections = diffs["courses"], diffs["sections"]
-    return {
-        **diffs,
-        "ctl_library_courses": courses.select(
-            F.concat(F.lit("CTL-"), F.col("course_id")).alias("course_id"),
-            F.col("short_name"),
-            F.concat(F.lit("CTL Library "), F.col("long_name")).alias("long_name"),
-            "term_id",
-            "status",
-        ),
-        "ctl_library_sections": sections.select(
-            F.concat(F.lit("CTL-"), F.col("section_id")).alias("section_id"),
-            F.concat(F.lit("CTL-"), F.col("course_id")).alias("course_id"),
-            "name",
-            "status",
-        ),
-    }
-
-
 class SyncEngine:
     """One sync run over a local catalog.
 
     erp: FIXTURES.md section C shaped DataFrames — ``reg_config``,
     ``faculty``, ``students``, ``courses``, ``sections``,
     ``enrollments`` (all with yr_cde/trm_cde except reg_config).
+    run_date: the mirrors' ``load_date`` stamp; today when not given,
+    as in the reference (``src/canvas.py:101``).
     """
 
     def __init__(
@@ -155,7 +128,7 @@ class SyncEngine:
         self.mirror_path = mirror_path
         self.dq_gate = dq_gate
         term_id = resolve_term(erp["reg_config"], term)
-        self.params = RunParams(term_id=term_id, run_date=run_date) if run_date else RunParams(term_id=term_id)
+        self.params = RunParams(term_id, run_date or dt.date.today())
 
     # ------------------------------------------------------------- E2
     def update_mirror_tables(self, raw_reports: dict[str, DataFrame]) -> None:
@@ -206,7 +179,8 @@ class SyncEngine:
         """The seven update DataFrames (SURVEY.md section 2.4),
         projected to Canvas SIS-import shapes (FIXTURES.md section D):
         five diffs of ERP truth against the mirrors, and the two CTL
-        updates projected from two of them (:func:`_with_ctl_updates`)."""
+        library updates projected 1:1 from the courses and sections
+        diffs."""
         from ..concurrency import run_legs
 
         p = self.params
@@ -266,48 +240,32 @@ class SyncEngine:
         )
         enrollments = snapshot_diff(erp_enr, mirror_enr, enr_keys)
 
-        return _with_ctl_updates({
+        return {
             "faculty_users": missing_users(self.erp["faculty"]),
             "student_users": missing_users(self.erp["students"]),
             "courses": courses,
             "sections": sections,
             "enrollments": enrollments,
-        })
+            "ctl_library_courses": courses.select(
+                F.concat(F.lit("CTL-"), F.col("course_id")).alias("course_id"),
+                F.col("short_name"),
+                F.concat(F.lit("CTL Library "), F.col("long_name")).alias("long_name"),
+                "term_id",
+                "status",
+            ),
+            "ctl_library_sections": sections.select(
+                F.concat(F.lit("CTL-"), F.col("section_id")).alias("section_id"),
+                F.concat(F.lit("CTL-"), F.col("course_id")).alias("course_id"),
+                "name",
+                "status",
+            ),
+        }
 
     def run(self, sink: Sink) -> DataFrame:
-        """Materialize the five diffs, apply the seven updates in FK
-        order, and return the report built from the observed counts.
-
-        Each diff is computed once, by one ``localCheckpoint`` job that
-        also observes its :func:`~.runner.change_counts`; the five jobs
-        overlap as legs of one ``run_legs`` call. The CTL updates are
-        1:1 projections of the checkpointed courses and sections that
-        keep ``status``, so they reuse those counts. The sinks then
-        read computed rows instead of re-running the anti-joins, and
-        the report, with :func:`~.runner.run_report`'s rows and types,
-        needs no Spark job."""
-        from pyspark.sql import Observation
-
-        from ..concurrency import run_legs
-
-        diffs = {
-            name: df
-            for name, df in self.build_updates().items()
-            if name not in _CTL_SOURCES
-        }
-        # enrollments (two broadcast builds and a checkpoint) is the
-        # longest leg: submitted first, it does not run alone in a
-        # second wave on the pool.
-        names = sorted(diffs, key=lambda name: name != "enrollments")
-        observations = {name: Observation(f"sync_{name}") for name in names}
-        frames = run_legs(*(
-            lambda df=diffs[name], obs=observations[name]: df.observe(
-                obs, *change_counts(df)
-            ).localCheckpoint(eager=True)
-            for name in names
-        ))
-        SyncPipeline(sink).apply(_with_ctl_updates(dict(zip(names, frames))))
-        counts = {name: obs.get for name, obs in observations.items()}
-        for ctl, source in _CTL_SOURCES.items():
-            counts[ctl] = counts[source]
-        return observed_report(self.spark, counts)
+        """Apply the seven updates in FK order and return the report
+        of the change counts their writes observed
+        (:meth:`~.runner.SyncPipeline.report`): the rows and types of
+        :func:`~.runner.run_report`, shown without a Spark job."""
+        pipe = SyncPipeline(sink)
+        pipe.apply(self.build_updates())
+        return pipe.report()

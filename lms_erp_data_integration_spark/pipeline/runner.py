@@ -7,14 +7,15 @@ ctl_library_courses -> ctl_library_sections) and then aggregates
 per-entity change statistics into a text report
 (``src/canvas.py:136-162``).
 
-Here the order is encoded as DAG edges over sink calls; each sink
-consumes a DataFrame. A two-phase sink (:class:`FileSink`) splits each
-call: all updates are staged concurrently, then published in FK order,
-so FK order is the order in which they become visible. The run report
-is computed *before* applying
-(an improvement the reference cannot do — it only learns counts from
-Canvas's import response): per-entity row counts and, where a status
-column exists, add/delete splits.
+Here each sink call consumes a DataFrame, made in FK order. A
+two-phase sink (:class:`FileSink`) splits each call: all updates are
+staged concurrently, then published in FK order, so FK order is the
+order in which they become visible. As in the reference, the counts
+come from the apply itself: each update carries an ``Observation`` of
+:func:`change_counts` that rides the write staging it, and the run
+report is built from those counts without a further Spark job. Per
+entity it holds the row count and, where a status column exists, the
+add/delete split.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from __future__ import annotations
 from collections.abc import Callable, Mapping
 from typing import Protocol
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.csv import write_sis_csv
@@ -116,42 +117,35 @@ def observed_report(
 
 
 class SyncPipeline:
-    """Drives update application in FK order through a sink callable.
+    """Drives update application in FK order through a sink callable,
+    and reports the change counts each update's write observed.
 
     The sink abstracts the reference's SIS-import REST POST
     (``src/canvas.py:118-133``); the engine core stays self-contained
     (tests use a recording sink; a CSV sink gives file parity).
 
-    With ``observe=True``, each update is instrumented with a Spark
-    ``Observation`` of :func:`change_counts`, so the counts piggyback
-    on the sink's own action instead of the extra aggregation pass per
-    entity that :func:`run_report` costs. Metrics land in
-    ``self.observed`` after ``apply`` (requires each sink call to run
-    exactly the kind of action a write is).
+    ``apply`` instruments every update with a Spark ``Observation`` of
+    :func:`change_counts`, so the counts ride the sink's own write
+    instead of the extra aggregation pass per entity that
+    :func:`run_report` costs. The contract for the sink: each call
+    (or, for a :class:`StagedSink`, each ``stage``) runs exactly one
+    action over the frame it is given, as a write does. ``report()``
+    waits for those observations, and an ``Observation`` whose frame
+    never ran an action blocks forever.
 
-    ``SyncEngine.run`` does not use it: the same observation rides the
-    job that materializes each diff before the apply, and the sink
-    path here is unchanged. Alternatives measured on the
-    ``sync_nightly`` benchmark (4 cores) and rejected:
+    Measured on the ``sync_nightly`` benchmark (4 cores) against
+    checkpointing the five diffs before the apply, with the counts
+    observed on the checkpoint jobs: a traced seed-7 night runs 29
+    Spark jobs instead of 32, for no gain in time: ``pass_s`` median
+    pair ratio 1.05 in two sets of 10 interleaved pairs (seeds
+    1001-1010: 2.50 -> 2.69 s, 5/10 wins, parent IQR 2.33-2.99 s;
+    seeds 2001-2010: 2.18 -> 2.27 s, 2/10 wins, parent IQR
+    2.04-2.58 s)."""
 
-    - ``observe=True`` over the lazy diffs plus a ``createDataFrame``
-      report: no faster than ``run_report`` over 12 alternating
-      nights, seed 31 (apply 1.41 -> 1.63 s, report 0.52 vs 0.67 s,
-      night 4.76 vs 4.78 s).
-    - ``tracked_persist`` plus a noop write instead of
-      ``localCheckpoint``: median night 3.09, 3.08 and 4.24 s against
-      2.80, 2.63 and 2.75 s (3 interleaved runs of 8 measured nights,
-      seeds 61-63). Its cached blocks also stay until
-      ``release_cached()``, which the CLI never calls.
-    - Checkpointing alone, with the report still ``run_report`` over
-      the checkpoints: median night 3.14 -> 2.92 s against the lazy
-      diffs, winning only 2 of 5 interleaved pairs (seeds 41-45). The
-      report from the observed counts is part of the gain."""
-
-    def __init__(self, sink: Sink, observe: bool = False):
+    def __init__(self, sink: Sink):
         self.sink = sink
-        self.observe = observe
-        self.observed: dict[str, dict] = {}
+        self._observations: dict[str, Observation] = {}
+        self._spark: SparkSession | None = None
 
     def apply(self, updates: Mapping[str, DataFrame]) -> list[str]:
         """Apply updates in dependency order; returns the order used.
@@ -164,29 +158,30 @@ class SyncPipeline:
 
         Unknown update names are rejected (mirrors the strictness of
         the reference's mirror-table allowlist)."""
-        from pyspark.sql import Observation
-
         unknown = set(updates) - set(UPDATE_ORDER)
         if unknown:
             raise NameError(f"unknown update entities: {sorted(unknown)}")
-        self.observed = {}
-        observations: dict[str, Observation] = {}
+        self._observations = {}
         frames: dict[str, DataFrame] = {}
         for name in UPDATE_ORDER:
             if name in updates:
                 df = updates[name]
-                if self.observe:
-                    obs = Observation(f"sync_{name}")
-                    df = df.observe(obs, *change_counts(df))
-                    observations[name] = obs
-                frames[name] = df
+                obs = self._observations[name] = Observation(f"sync_{name}")
+                frames[name] = df.observe(obs, *change_counts(df))
+                self._spark = df.sparkSession
         if hasattr(self.sink, "stage"):
             self._stage(frames)
         for name, df in frames.items():
             self.sink(name, df)
-        for name, obs in observations.items():
-            self.observed[name] = dict(obs.get)
         return list(frames)
+
+    def report(self) -> DataFrame:
+        """:func:`observed_report` over the counts the last ``apply``
+        observed; waits for each of them."""
+        return observed_report(
+            self._spark,
+            {name: obs.get for name, obs in self._observations.items()},
+        )
 
     def _stage(self, frames: Mapping[str, DataFrame]) -> None:
         from ..concurrency import run_legs

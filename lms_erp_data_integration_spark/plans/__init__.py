@@ -31,6 +31,9 @@ registry.PRIORITY = [
     "sync_ctl_library_courses",
     "sync_ctl_library_sections",
     "sync_clean_users",
+    # changed: sync_pipeline_run_report builds its report through
+    # SyncPipeline.report and reports NULL sums for an empty update
+    "sync_pipeline_run_report",
     # changed: broadcast hints go through hints.bounded_broadcast, and
     # rel_pagerank_parts no longer passes pagerank_micros a broadcast
     # flag; pagerank_micros no longer carries a constant cnt column
@@ -76,5 +79,4 @@ registry.PRIORITY = [
     "rel_dq_expectations",
     "rel_event_burst_pairs",
     "rel_grouping_sets",
-    "rel_incremental_agg_merge",
 ]

@@ -508,14 +508,15 @@ FROM u{i}"""
 def pipeline_run_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end composed pipeline under the driver gate (r7 verdict
     #7): the seven sync diffs feed ``SyncPipeline.apply`` — the
-    FK-ordered sink runner mirroring ``src/canvas.py:107-133`` — with
-    ``observe=True``, so each entity's change counts ride the sink's
-    own action as a zero-cost Spark ``Observation`` (S9/S10/O1 in one
-    row). The sink is the no-op datasource write: a full distributed
-    action per entity with nothing persisted. The returned frame is
-    built from the APPLIED order and the OBSERVED metrics, so the
-    driver row goes red if the FK ordering, the observation
-    instrumentation, or any upstream diff regresses.
+    FK-ordered sink runner mirroring ``src/canvas.py:107-133`` — which
+    lets each entity's change counts ride the sink's own action as a
+    zero-cost Spark ``Observation`` (S9/S10/O1 in one row). The sink is
+    the no-op datasource write: a full distributed action per entity
+    with nothing persisted. The returned frame is ``SyncPipeline.report``
+    (a local relation: collecting it runs no Spark job) with the
+    APPLIED order as ``apply_seq``, so the driver row goes red if the
+    FK ordering, the observation instrumentation, or any upstream diff
+    regresses. An empty update reports NULL sums, as SQL does.
 
     Scale posture: identical to the seven diffs it composes (AQE-
     selected anti-joins); the observation adds no extra pass — the
@@ -530,7 +531,7 @@ def pipeline_run_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     actions (r8 A/B at the bench, min-of-3 warm: 7.65 -> 4.51 s);
     solo queries build their own frames and keep their committed
     plans."""
-    from ..pipeline.runner import ENTITY_KIND, SyncPipeline
+    from ..pipeline.runner import SyncPipeline
 
     cat = Catalog(spark, sf_dir)
     mirror_users = _mirror_users(cat).persist()
@@ -584,25 +585,14 @@ def pipeline_run_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     def noop_sink(name: str, df: DataFrame) -> None:
         df.write.format("noop").mode("overwrite").save()
 
-    pipe = SyncPipeline(noop_sink, observe=True)
+    pipe = SyncPipeline(noop_sink)
     try:
         applied = pipe.apply(updates)
     finally:
         for shared in (mirror_users, mirror_pairs, mirror_bts):
             shared.unpersist(blocking=False)
-    rows = [
-        (
-            seq + 1,
-            name,
-            ENTITY_KIND[name],
-            int(pipe.observed[name]["n_rows"]),
-            int(pipe.observed[name]["n_active"] or 0),
-            int(pipe.observed[name]["n_deleted"] or 0),
-        )
-        for seq, name in enumerate(applied)
-    ]
-    return spark.createDataFrame(
-        rows,
-        "apply_seq long, entity string, kind string, n_rows long,"
-        " n_active long, n_deleted long",
+    return pipe.report().select(
+        F.array_position(F.array(*map(F.lit, applied)), F.col("entity"))
+        .alias("apply_seq"),
+        "*",
     )

@@ -10,7 +10,7 @@ query once untimed, and its rows are compared with the first arm's by
 ``scripts/parity.py``'s ``frame_key``; a mismatch exits 1 and names the
 arm and query. Then N rounds run every arm over every query, arms in
 reverse order on odd rounds, each run timed by ``bench.timed_run``. The
-conf keys and the pool class are restored after every run. One JSON
+conf keys are restored, and legs run on the pool again, after every run. One JSON
 document is printed: per arm its sweep times, min, median and per-query
 times, and per later arm its min and median ratio to the first arm.
 ``--sf-dir`` defaults to ``SPARK_GRAFT_SF_DIR``, as in ``bench.py``.
@@ -51,7 +51,7 @@ def parse_arm(arm: str) -> tuple[str, dict[str, str], bool]:
 
 @contextlib.contextmanager
 def applied(spark, conf: dict[str, str], serial: bool):
-    """Run the block under an arm's conf overrides and executor, and put
+    """Run the block under an arm's conf overrides and leg mode, and put
     both back afterwards."""
     before = {k: spark.conf.get(k, None) for k in conf}
     for k, v in conf.items():

@@ -122,6 +122,21 @@ def test_cli_sync_end_to_end(spark, tmp_path):
     assert "1002" in body  # stu.b is the missing student user
 
 
+def test_cli_sync_stamps_mirrors_with_todays_date(spark, tmp_path):
+    """A ``--raw`` night stamps every mirror row's ``load_date`` with
+    the date the night ran, as the reference does
+    (``src/canvas.py:101``)."""
+    from lms_erp_data_integration_spark.pipeline.mirror import read_mirror
+
+    erp_dir, raw_dir = _write_sync_inputs(spark, tmp_path)
+    before = dt.date.today()
+    _run_sync(erp_dir, raw_dir, tmp_path / "mirror", tmp_path / "out")
+    days = {before, dt.date.today()}
+    users = read_mirror(spark, "users", str(tmp_path / "mirror"))
+    stamps = {r["load_date"] for r in users.select("load_date").collect()}
+    assert stamps and stamps <= days
+
+
 def test_cli_sync_missing_inputs(spark, tmp_path):
     """A missing raw report skips that entity's mirror refresh, so its
     previous snapshot stays; a missing ERP table still fails the run

@@ -98,6 +98,12 @@ def engine(spark, tmp_path_factory):
     return eng
 
 
+def _noop_sink(name, df):
+    """A sink that writes nothing, with the one action per update the
+    pipeline's observed counts need."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 def test_term_resolution(engine):
     assert engine.params.term_id == "211S"
 
@@ -131,7 +137,12 @@ def test_updates_and_fk_ordered_run(engine):
     }
 
     seen: list[str] = []
-    report = engine.run(lambda name, df: seen.append(name))
+
+    def sink(name, df):
+        seen.append(name)
+        _noop_sink(name, df)
+
+    report = engine.run(sink)
     assert seen == [
         "faculty_users",
         "student_users",
@@ -147,20 +158,17 @@ def test_updates_and_fk_ordered_run(engine):
 
 
 def test_run_applies_materialized_diffs_in_fk_order(engine):
-    """run computes every diff before the apply: the sink receives the
-    seven updates in FK order as frames whose optimized plans read
-    checkpointed rows, with no anti-join left to re-run."""
+    """The sink receives the seven updates in FK order."""
     from lms_erp_data_integration_spark.pipeline.runner import UPDATE_ORDER
 
-    seen: list[tuple[str, str]] = []
+    seen: list[str] = []
 
     def sink(name, df):
-        seen.append((name, df._jdf.queryExecution().optimizedPlan().toString()))
+        seen.append(name)
+        _noop_sink(name, df)
 
     engine.run(sink)
-    assert [name for name, _ in seen] == list(UPDATE_ORDER)
-    for name, plan in seen:
-        assert "Join" not in plan, (name, plan)
+    assert seen == list(UPDATE_ORDER)
 
 
 def _report_rows(df):
@@ -170,10 +178,10 @@ def _report_rows(df):
 def test_run_report_from_observed_counts(engine, spark):
     """run's report has run_report's rows, names and types, and
     showing it runs no Spark job: it is built from the counts the
-    materialization observed."""
+    sink's writes observed."""
     from lms_erp_data_integration_spark.pipeline.runner import run_report
 
-    report = engine.run(lambda name, df: None)
+    report = engine.run(_noop_sink)
     sc = spark.sparkContext
     sc.setJobGroup("sync-report-probe", "collect the observed report")
     try:
@@ -199,7 +207,7 @@ def test_run_report_on_an_empty_update(engine, spark):
         term="current",
         run_date=dt.date(2021, 9, 1),
     )
-    got = _report_rows(quiet.run(lambda name, df: None))
+    got = _report_rows(quiet.run(_noop_sink))
     assert got == _report_rows(run_report(quiet.build_updates()))
     assert got[1][0][:5] == ("faculty_users", "Account", 0, None, None)
 

@@ -2,8 +2,8 @@
 independent driver-blocking legs run from the shared thread pool
 (``concurrency.run_legs``) must produce bit-identical rows to the same
 legs run inline on the calling thread. Pinned with
-``concurrency.serial_legs`` (``run_legs`` resolves the pool class at
-call time, so the swap takes effect per invocation).
+``concurrency.serial_legs`` (``run_legs`` reads its flag on every call,
+so the switch takes effect per invocation).
 
 Scope (r14 ADVICE #5): the serial arm pins "threaded legs == the same
 legs run inline", not "new == pre-overlap code" — for

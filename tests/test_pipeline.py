@@ -132,8 +132,8 @@ def test_upsert_mirror_partition_scoped(spark, tmp_path):
 
 
 def test_pipeline_observed_metrics(spark):
-    """observe=True: change counts ride the sink's own action (no
-    extra aggregation pass), matching run_report's numbers."""
+    """The change counts ride the sink's own action (no extra
+    aggregation pass), matching run_report's numbers."""
     enr = spark.createDataFrame(
         [(1, "C1", "active"), (2, "C1", "deleted"), (3, "C2", "active")],
         "user_id long, course_id string, status string",
@@ -142,22 +142,46 @@ def test_pipeline_observed_metrics(spark):
         [(1, "a")], "user_id long, login_id string"
     )
     counted: list[int] = []
-    pipe = SyncPipeline(
-        lambda name, df: counted.append(df.count()), observe=True
-    )
+    pipe = SyncPipeline(lambda name, df: counted.append(df.count()))
     pipe.apply({"enrollments": enr, "student_users": users})
     assert counted == [1, 3]
-    assert pipe.observed["enrollments"] == {
-        "n_rows": 3,
-        "n_active": 2,
-        "n_deleted": 1,
-    }
+    got = {r["entity"]: tuple(r)[2:] for r in pipe.report().collect()}
+    assert got["enrollments"] == (3, 2, 1)
     # no status column -> everything counts as active
-    assert pipe.observed["student_users"] == {
-        "n_rows": 1,
-        "n_active": 1,
-        "n_deleted": 0,
+    assert got["student_users"] == (1, 1, 0)
+
+
+def test_file_sink_report_equals_run_report(spark, tmp_path):
+    """Counted on the staging writes of a :class:`FileSink`, the report
+    has run_report's rows, names and types, NULL sums of an empty
+    update included, and collecting it starts no Spark job."""
+    from lms_erp_data_integration_spark.pipeline.runner import FileSink
+
+    updates = {
+        "enrollments": spark.createDataFrame(
+            [("C1", 1, "active"), ("C1", 2, "deleted")],
+            "course_id string, user_id long, status string",
+        ),
+        "courses": spark.createDataFrame(
+            [("C1", "active")], "course_id string, status string"
+        ),
+        "faculty_users": spark.createDataFrame(
+            [], "user_id long, login_id string, status string"
+        ),
     }
+    pipe = SyncPipeline(FileSink(spark, str(tmp_path / "out"), "csv"))
+    pipe.apply(updates)
+    report = pipe.report()
+    sc = spark.sparkContext
+    sc.setJobGroup("file-sink-report-probe", "collect the observed report")
+    try:
+        got = report.schema.simpleString(), [tuple(r) for r in report.collect()]
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("file-sink-report-probe") == []
+    want = run_report(updates)
+    assert got == (want.schema.simpleString(), [tuple(r) for r in want.collect()])
+    assert got[1][0] == ("faculty_users", "Account", 0, None, None)
 
 
 def test_mirror_schemas_match_the_cleaning_specs(spark):

@@ -3,16 +3,22 @@
 
 from __future__ import annotations
 
-import concurrent.futures as cf
 import importlib
 import os
+import threading
 
 import pytest
 
 import bench
 from lms_erp_data_integration_spark import caching
+from lms_erp_data_integration_spark.concurrency import run_legs
 
 SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts")
+
+
+def _leg_runs_on_a_pool_thread() -> bool:
+    """A serial arm is over: legs run on the pool again."""
+    return run_legs(threading.get_ident) != [threading.get_ident()]
 
 
 @pytest.fixture
@@ -54,10 +60,9 @@ def test_timed_run_records_first_error_per_name(spark, sf_dir):
 def test_run_ab_serial_arm_rows_equal(spark, sf_dir, ab):
     from lms_erp_data_integration_spark import plans
 
-    pool = cf.ThreadPoolExecutor
     q = "sync_pipeline_run_report"
     doc = ab.run_ab(spark, {q: plans.QUERIES[q]}, ["base", "seq:serial"], 1, sf_dir)
-    assert cf.ThreadPoolExecutor is pool
+    assert _leg_runs_on_a_pool_thread()
     assert doc["rows_equal"] is True and doc["errors"] == {}
     assert doc["queries"] == [q] and list(doc["arms"]) == ["base", "seq"]
     base, seq = doc["arms"]["base"], doc["arms"]["seq"]
@@ -77,12 +82,11 @@ def test_run_ab_reports_row_mismatch_and_restores_conf(spark, sf_dir, ab):
     assert doc == {"rows_equal": False, "mismatch": ["b: rng"]}
     assert spark.conf.get(key, None) is None
 
-    pool = cf.ThreadPoolExecutor
     spark.conf.set(key, "2")
     try:
         doc = ab.run_ab(spark, {"rng": q}, [f"a:{key}=3,serial", "b:serial"], 1, sf_dir)
         assert doc["rows_equal"] is False
-        assert spark.conf.get(key) == "2" and cf.ThreadPoolExecutor is pool
+        assert spark.conf.get(key) == "2" and _leg_runs_on_a_pool_thread()
     finally:
         spark.conf.unset(key)
 
