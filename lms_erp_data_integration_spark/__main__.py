@@ -7,23 +7,23 @@ refresh mirrors, compute updates, apply in FK order, print counts).
         --sf-dir /root/testdata/sf0.01 --limit 10 [--explain]
     python -m lms_erp_data_integration_spark sync \\
         --erp ERP_DIR --mirror MIRROR_DIR --out OUT_DIR \\
-        [--raw RAW_DIR] [--term current] [--sink csv|parquet] \\
-        [--no-dq-gate]
+        [--raw RAW_DIR] [--term current]
 
 ``sync`` reads the six ERP tables (``reg_config faculty students
 courses sections enrollments``) from ``ERP_DIR/<name>.parquet`` (or
 ``.csv`` with a header), optionally refreshes the mirror tables from a
 raw provisioning-report directory (``RAW_DIR/<entity>.parquet|csv`` —
-the reference's E2 step), computes the seven diff updates, applies
-them in FK order through a CSV or Parquet sink under ``OUT_DIR``, and
-prints the per-entity run report.
+the reference's E2 step) behind an always-on DQ gate, computes the
+seven diff updates, applies them in FK order through the CSV sink
+under ``OUT_DIR``, and prints the per-entity run report.
 
-Every input is read with a declared schema (``sources.schemas``), so
-no read runs a schema-inference job. Columns are matched by name, and
-a file's extra columns are dropped. A file that lacks a declared
-column, or a parquet file that has it with a type Spark cannot read
-into the declared one, fails the night before anything is written; a
-CSV value that does not parse as its declared type fails the read.
+Every input is read with a declared schema (``sources.schemas``)
+through ``sources.declared``, so no read runs a schema-inference job.
+Columns are matched by name, and a file's extra columns are dropped.
+A file that lacks a declared column, or a parquet file that has it
+with a type Spark cannot read into the declared one, fails the night
+before anything is written; a CSV value that does not parse as its
+declared type fails the read.
 The sink stages the seven updates concurrently under
 ``OUT_DIR/_staging`` and then publishes each into ``OUT_DIR/<name>``
 in FK order.
@@ -32,21 +32,7 @@ in FK order.
 from __future__ import annotations
 
 import argparse
-import os
 import sys
-
-
-def _load_table(spark, directory: str, name: str, schema):
-    from .pipeline.mirror import read_declared_parquet
-    from .sources.csv import read_declared_csv
-
-    pq = os.path.join(directory, f"{name}.parquet")
-    csv = os.path.join(directory, f"{name}.csv")
-    if os.path.exists(pq):
-        return read_declared_parquet(spark, pq, schema)
-    if os.path.exists(csv):
-        return read_declared_csv(spark, csv, schema)
-    raise FileNotFoundError(f"no {name}.parquet or {name}.csv in {directory}")
 
 
 def _cmd_list() -> int:
@@ -79,19 +65,13 @@ def _cmd_query(args) -> int:
     return 0
 
 
-def _load_optional(spark, directory: str, name: str, schema):
-    try:
-        return _load_table(spark, directory, name, schema)
-    except FileNotFoundError:
-        return None
-
-
 def _cmd_sync(args) -> int:
     from .concurrency import run_legs
     from .pipeline.engine import SyncEngine
     from .pipeline.mirror import MIRROR_ENTITIES
-    from .pipeline.runner import FileSink, csv_sink
+    from .pipeline.runner import csv_sink
     from .session import get_spark
+    from .sources.declared import read_declared_table
     from .sources.schemas import ENTITY_CSV_SCHEMAS, ERP_SCHEMAS
 
     spark = get_spark(app_name="sync")
@@ -102,12 +82,12 @@ def _cmd_sync(args) -> int:
     raw_entities = MIRROR_ENTITIES if args.raw else ()
     frames = run_legs(
         *(
-            lambda n=n, s=s: _load_table(spark, args.erp, n, s)
+            lambda n=n, s=s: read_declared_table(spark, args.erp, n, s)
             for n, s in ERP_SCHEMAS.items()
         ),
         *(
-            lambda e=e: _load_optional(
-                spark, args.raw, e, ENTITY_CSV_SCHEMAS[e]
+            lambda e=e: read_declared_table(
+                spark, args.raw, e, ENTITY_CSV_SCHEMAS[e], missing_ok=True
             )
             for e in raw_entities
         ),
@@ -118,17 +98,10 @@ def _cmd_sync(args) -> int:
         for e, df in zip(raw_entities, frames[len(ERP_SCHEMAS):])
         if df is not None
     }
-    engine = SyncEngine(
-        spark, erp, args.mirror, term=args.term, dq_gate=not args.no_dq_gate
-    )
+    engine = SyncEngine(spark, erp, args.mirror, term=args.term)
     if raw:
         engine.update_mirror_tables(raw)
-
-    if args.sink == "csv":
-        sink = csv_sink(args.out)
-    else:
-        sink = FileSink(spark, args.out, "parquet")
-    report = engine.run(sink)
+    report = engine.run(csv_sink(args.out))
     report.show(100, truncate=False)
     return 0
 
@@ -153,8 +126,6 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--out", required=True, help="update sink directory")
     s.add_argument("--raw", help="raw provisioning reports directory (E2)")
     s.add_argument("--term", default="current")
-    s.add_argument("--sink", choices=("csv", "parquet"), default="csv")
-    s.add_argument("--no-dq-gate", action="store_true")
 
     args = parser.parse_args(argv)
     if args.cmd == "list":

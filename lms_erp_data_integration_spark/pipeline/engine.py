@@ -11,12 +11,14 @@ Lifecycle parity (SURVEY.md section 3):
   partitioned overwrite mirrors (``src/canvas.py:55-104`` +
   ``src/jenzabar.py:31-47``). Admission is all-or-nothing across
   entities: all DQ gates pass before any mirror is written. The gates
+  always run, since the reports come from outside the program; they
   overlap with each other, and then the writes do.
 - E3 diff & apply: the seven update queries as broadcast anti-joins
   over ERP truth vs mirrors (``src/jenzabar.py:50-80``), applied in FK
   order with an engine-side run report (``src/canvas.py:107-162``).
   The four mirror reads overlap and run no schema-inference job: they
-  declare ``sources.schemas.MIRROR_SCHEMAS``. A two-phase sink
+  go through ``sources.declared`` with
+  ``sources.schemas.MIRROR_SCHEMAS``. A two-phase CSV sink
   (``runner.FileSink``) writes all seven updates concurrently to a
   staging area, then publishes them in FK order, so FK order is the
   order in which the files become visible. Each staging write also
@@ -47,13 +49,9 @@ from ..operators import dq
 from ..operators.cleaning import ENTITY_SPECS, clean
 from ..operators.diff import missing_rows, snapshot_diff
 from ..runparams import RunParams
+from ..sources.declared import read_declared_parquet
 from ..sources.schemas import MIRROR_SCHEMAS
-from .mirror import (
-    MIRROR_ENTITIES,
-    mirror_table_path,
-    read_declared_parquet,
-    write_mirror,
-)
+from .mirror import MIRROR_ENTITIES, mirror_table_path, write_mirror
 from .runner import Sink, SyncPipeline
 
 # Mirror admission expectations (r4 verdict #8): the invariants the
@@ -121,12 +119,10 @@ class SyncEngine:
         mirror_path: str,
         term: str = "current",
         run_date=None,
-        dq_gate: bool = True,
     ):
         self.spark = spark
         self.erp = erp
         self.mirror_path = mirror_path
-        self.dq_gate = dq_gate
         term_id = resolve_term(erp["reg_config"], term)
         self.params = RunParams(term_id, run_date or dt.date.today())
 
@@ -147,12 +143,11 @@ class SyncEngine:
             entity: clean(raw, ENTITY_SPECS[entity], self.params)
             for entity, raw in raw_reports.items()
         }
-        if self.dq_gate:
-            checks = mirror_checks()
-            run_legs(*(
-                lambda e=e, df=df: dq.enforce(df, checks.get(e, []), label=e)
-                for e, df in cleaned.items()
-            ))
+        checks = mirror_checks()
+        run_legs(*(
+            lambda e=e, df=df: dq.enforce(df, checks.get(e, []), label=e)
+            for e, df in cleaned.items()
+        ))
         run_legs(*(
             lambda e=e, df=df: write_mirror(df, e, self.mirror_path)
             for e, df in cleaned.items()

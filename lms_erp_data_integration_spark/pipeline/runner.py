@@ -7,8 +7,8 @@ ctl_library_courses -> ctl_library_sections) and then aggregates
 per-entity change statistics into a text report
 (``src/canvas.py:136-162``).
 
-Here each sink call consumes a DataFrame, made in FK order. A
-two-phase sink (:class:`FileSink`) splits each call: all updates are
+Here each sink call consumes a DataFrame, made in FK order. The
+two-phase CSV sink (:class:`FileSink`) splits each call: all updates are
 staged concurrently, then published in FK order, so FK order is the
 order in which they become visible. As in the reference, the counts
 come from the apply itself: each update carries an ``Observation`` of
@@ -77,7 +77,7 @@ def run_report(updates: Mapping[str, DataFrame]) -> DataFrame:
     parts = [
         updates[name].agg(
             F.lit(name).alias("entity"),
-            F.lit(ENTITY_KIND.get(name, "Unknown")).alias("kind"),
+            F.lit(ENTITY_KIND[name]).alias("kind"),
             *change_counts(updates[name]),
         )
         for name in UPDATE_ORDER
@@ -102,7 +102,7 @@ def observed_report(
         return "CAST(NULL AS BIGINT)" if v is None else f"CAST({int(v)} AS BIGINT)"
 
     rows = [
-        f"('{name}', '{ENTITY_KIND.get(name, 'Unknown')}', "
+        f"('{name}', '{ENTITY_KIND[name]}', "
         + ", ".join(bigint(counts[name][c]) for c in _COUNT_COLUMNS)
         + ")"
         for name in UPDATE_ORDER
@@ -222,19 +222,16 @@ class StagedSink(Protocol):
 
 class FileSink:
     """Writes each update to ``<base>/<name>`` as Canvas-SIS-import
-    CSV (``src/jenzabar.py:64-66`` file layout) or as Parquet, in two
-    phases (:class:`StagedSink`): ``stage`` writes
+    CSV (``src/jenzabar.py:64-66`` file layout), the one format a SIS
+    import takes, in two phases (:class:`StagedSink`): ``stage`` writes
     ``<base>/_staging/<name>``; the call deletes ``<base>/<name>`` and
     renames the staged directory into its place through the Hadoop
     ``FileSystem`` of the path. ``_staging`` is removed once nothing
     staged is left."""
 
-    def __init__(self, spark: SparkSession, base_path: str, fmt: str = "csv"):
-        if fmt not in ("csv", "parquet"):
-            raise ValueError(f"unknown sink format {fmt!r}")
+    def __init__(self, spark: SparkSession, base_path: str):
         self.spark = spark
         self.base_path = base_path.rstrip("/")
-        self.fmt = fmt
         self._staged: set[str] = set()
 
     def _path(self, *parts: str):
@@ -247,11 +244,7 @@ class FileSink:
         )
 
     def stage(self, name: str, df: DataFrame) -> None:
-        path = f"{self.base_path}/_staging/{name}"
-        if self.fmt == "csv":
-            write_sis_csv(df, path)
-        else:
-            df.write.mode("overwrite").parquet(path)
+        write_sis_csv(df, f"{self.base_path}/_staging/{name}")
         self._staged.add(name)
 
     def __call__(self, name: str, df: DataFrame) -> None:
@@ -271,6 +264,6 @@ class FileSink:
 
 
 def csv_sink(base_path: str) -> FileSink:
-    """The CSV :class:`FileSink` under ``base_path``, on the active
+    """The :class:`FileSink` under ``base_path``, on the active
     session."""
-    return FileSink(SparkSession.active(), base_path, "csv")
+    return FileSink(SparkSession.active(), base_path)

@@ -1,4 +1,5 @@
-from .csv import read_declared_csv, read_entity_csv, write_sis_csv  # noqa: F401
+from .csv import read_entity_csv, write_sis_csv  # noqa: F401
+from .declared import read_declared_csv  # noqa: F401
 from .schemas import ENTITY_CSV_SCHEMAS  # noqa: F401
 from .rest import ReportSource, SISImportSink  # noqa: F401
 from .jdbc import jdbc_options  # noqa: F401

@@ -86,7 +86,7 @@ def _write_sync_inputs(spark, tmp_path):
     return erp_dir, raw_dir
 
 
-def _run_sync(erp_dir, raw_dir, mirror_dir, out_dir, sink="csv") -> str:
+def _run_sync(erp_dir, raw_dir, mirror_dir, out_dir) -> str:
     """Run the ``sync`` command, without ``--raw`` when ``raw_dir`` is
     None; returns what it printed."""
     buf = io.StringIO()
@@ -99,7 +99,6 @@ def _run_sync(erp_dir, raw_dir, mirror_dir, out_dir, sink="csv") -> str:
                 "--mirror", str(mirror_dir),
                 "--out", str(out_dir),
                 *raw,
-                "--sink", sink,
             ]
         )
     assert rc == 0
@@ -261,6 +260,21 @@ def test_cli_sync_rejects_a_column_of_another_type_before_writing(
     assert not out_dir.exists()
 
 
+def test_cli_sync_dq_gate_fails_the_night_before_writing(spark, tmp_path):
+    """A raw users report that repeats a ``user_id`` trips the mirror
+    admission gate: the night raises before any mirror or update file
+    is written, staging included."""
+    from lms_erp_data_integration_spark.operators.dq import DQGateError
+
+    erp_dir, raw_dir = _write_sync_inputs(spark, tmp_path)
+    _rewrite(spark, raw_dir / "users.parquet", lambda df: df.union(df))
+    mirror_dir, out_dir = tmp_path / "mirror", tmp_path / "out"
+    with pytest.raises(DQGateError):
+        _run_sync(erp_dir, raw_dir, mirror_dir, out_dir)
+    assert not list(mirror_dir.glob("rpc_re_canvas_*"))
+    assert not out_dir.exists()
+
+
 def test_cli_sync_reads_csv_tables_and_rejects_a_mismatched_header(
     spark, tmp_path
 ):
@@ -341,24 +355,6 @@ def test_cli_sync_reads_narrower_integer_columns(spark, tmp_path):
         )
     assert updates("int") == as_long
     assert as_long["student_users"][0].startswith("1002,")
-
-
-def test_cli_sync_parquet_sink_writes_the_seven_updates(spark, tmp_path):
-    from lms_erp_data_integration_spark.pipeline.runner import UPDATE_ORDER
-
-    erp_dir, raw_dir = _write_sync_inputs(spark, tmp_path)
-    out_dir = tmp_path / "out"
-    _run_sync(erp_dir, raw_dir, tmp_path / "mirror", out_dir, sink="parquet")
-    assert sorted(p.name for p in out_dir.iterdir()) == sorted(UPDATE_ORDER)
-    got = {
-        name: sorted(map(tuple, spark.read.parquet(str(out_dir / name)).collect()))
-        for name in UPDATE_ORDER
-    }
-    assert got["student_users"] == [(1002, "stu.b", "Bea", "Stu", "active")]
-    assert got["enrollments"] == [("CS200", 1002, "student", "S1", "active")]
-    assert got["ctl_library_sections"] == [
-        ("CTL-S1", "CTL-CS200", "Lab", "active")
-    ]
 
 
 def test_cli_query_json_output(spark, capsys):

@@ -230,6 +230,7 @@ def test_dq_gate_blocks_poisoned_mirror(spark, tmp_path):
 
     from lms_erp_data_integration_spark.operators.dq import DQGateError
     from lms_erp_data_integration_spark.pipeline.engine import SyncEngine
+    from lms_erp_data_integration_spark.pipeline.mirror import mirror_table_path
 
     erp = {
         "reg_config": spark.createDataFrame(
@@ -250,7 +251,7 @@ def test_dq_gate_blocks_poisoned_mirror(spark, tmp_path):
         eng.update_mirror_tables({"users": users})
     assert any(n == "id_num_unique" for n, _ in ei.value.failed)
     # fail-closed: nothing written for the poisoned entity
-    assert not os.path.exists(os.path.join(mirror, "users"))
+    assert not os.path.exists(mirror_table_path(mirror, "users"))
     # the same report deduplicated passes the gate and lands
     eng.update_mirror_tables({"users": users.limit(1)})
     assert eng.mirror("users").count() == 1

@@ -92,45 +92,6 @@ def test_update_order_matches_reference():
     )
 
 
-def test_upsert_mirror_partition_scoped(spark, tmp_path):
-    from lms_erp_data_integration_spark.pipeline.mirror import (
-        read_mirror,
-        upsert_mirror,
-        write_mirror,
-    )
-
-    base = str(tmp_path / "mirror")
-    initial = spark.createDataFrame(
-        [
-            ("2025", "FA", 1, "alice"),
-            ("2025", "FA", 2, "bob"),
-            ("2026", "SP", 3, "carol"),
-        ],
-        "yr_cde string, trm_cde string, id long, name string",
-    )
-    write_mirror(initial, "users", base)
-
-    # update key 2, insert key 4 — both in the 2025/FA partition only
-    delta = spark.createDataFrame(
-        [("2025", "FA", 2, "bob2"), ("2025", "FA", 4, "dan")],
-        "yr_cde string, trm_cde string, id long, name string",
-    )
-    upsert_mirror(spark, delta, "users", base, key_cols=("id",))
-
-    # partition discovery re-infers yr_cde as int on read-back —
-    # normalize to str so the assertion pins values, not inference
-    rows = {
-        r["id"]: (str(r["yr_cde"]), r["trm_cde"], r["name"])
-        for r in read_mirror(spark, "users", base).collect()
-    }
-    assert rows == {
-        1: ("2025", "FA", "alice"),
-        2: ("2025", "FA", "bob2"),
-        4: ("2025", "FA", "dan"),
-        3: ("2026", "SP", "carol"),  # untouched partition intact
-    }
-
-
 def test_pipeline_observed_metrics(spark):
     """The change counts ride the sink's own action (no extra
     aggregation pass), matching run_report's numbers."""
@@ -169,7 +130,7 @@ def test_file_sink_report_equals_run_report(spark, tmp_path):
             [], "user_id long, login_id string, status string"
         ),
     }
-    pipe = SyncPipeline(FileSink(spark, str(tmp_path / "out"), "csv"))
+    pipe = SyncPipeline(FileSink(spark, str(tmp_path / "out")))
     pipe.apply(updates)
     report = pipe.report()
     sc = spark.sparkContext
@@ -219,7 +180,7 @@ def test_declared_parquet_checks_every_file(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import types as T
 
-    from lms_erp_data_integration_spark.pipeline.mirror import (
+    from lms_erp_data_integration_spark.sources.declared import (
         read_declared_parquet,
     )
 
@@ -270,7 +231,7 @@ def test_file_sink_staging_failure_publishes_nothing(spark, tmp_path):
     updates["sections"] = boom
     out = tmp_path / "out"
     with pytest.raises(Exception, match="boom"):
-        SyncPipeline(FileSink(spark, str(out), "csv")).apply(updates)
+        SyncPipeline(FileSink(spark, str(out))).apply(updates)
     assert [p.name for p in out.iterdir()] == []
 
 
@@ -282,7 +243,7 @@ def test_file_sink_publishes_a_call_it_never_staged(spark, tmp_path):
     from lms_erp_data_integration_spark.pipeline.runner import FileSink
 
     out = tmp_path / "out"
-    sink = FileSink(spark, str(out), "csv")
+    sink = FileSink(spark, str(out))
     sink("courses", spark.createDataFrame([("old",)], "course_id string"))
     sink("courses", spark.createDataFrame([("new",)], "course_id string"))
     assert sorted(p.name for p in out.iterdir()) == ["courses"]
