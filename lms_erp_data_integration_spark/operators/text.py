@@ -45,14 +45,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"), F.lit(0)))
 
 
-def token_occurrences(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """One row per token occurrence (order preserved via pos)."""
-    return df.select(
-        F.col(id_col),
-        F.posexplode(ws_tokens(F.col(text_col))).alias("pos", "token"),
-    )
-
-
 def shingle_array(text: Column, n: int = 3) -> Column:
     """Array of n-word shingles for one document (order preserved,
     duplicates included) — pure Column expression, no shuffle.

@@ -343,110 +343,3 @@ def tws_timer_flush_totals(events: DataFrame) -> DataFrame:
         outputMode="Append",
         timeMode="EventTime",
     )
-
-
-class UserTotalsTTLProcessor(UserTotalsProcessor):
-    """``UserTotalsProcessor`` with a TTL on the ValueState — the
-    ttlDurationMs leg of the typed-state protocol (state rows carry an
-    expiration the store enforces on read). TTL expiry is wall-clock
-    (processing-time) by definition, so it stays OUT of the
-    exact-oracle surface: the tested configuration uses a TTL far
-    longer than any bounded run, where the protocol leg is exercised
-    end-to-end (TTL config message, expiry-stamped state encoding)
-    while the results remain deterministic and equal the no-TTL
-    totals (``test_tws_ttl_value_state``)."""
-
-    def __init__(self, ttl_ms: int = 3_600_000) -> None:
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._totals = handle.getValueState(
-            "totals", _STATE_SCHEMA, ttlDurationMs=self._ttl_ms
-        )
-
-
-def tws_running_user_totals_ttl(
-    events: DataFrame, ttl_ms: int = 3_600_000
-) -> DataFrame:
-    """Per-user running totals with TTL'd ValueState. TTL requires a
-    processing-time-aware mode; output semantics at a
-    long-relative-to-run TTL equal ``tws_running_user_totals``."""
-    _ensure_worker_protobuf(events)
-    scaled = events.select(
-        "user_id",
-        F.round(F.col("value") * 1_000_000).cast("long").alias("v_micros"),
-    )
-    return scaled.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserTotalsTTLProcessor(ttl_ms),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="ProcessingTime",
-    )
-
-
-# decoy expiry for the timer-management processor: 2001-01-01, one
-# year after TIMER_FLUSH_AT_MS — far enough past the real expiry that
-# a leaked decoy would fire in the same bounded run and break the
-# one-row contract, which is exactly what the test pins against
-TIMER_DECOY_AT_MS = 978_307_200_000
-
-
-class TimerJugglingProcessor(UserTimerFlushProcessor):
-    """``UserTimerFlushProcessor`` plus the timer-MANAGEMENT protocol
-    legs: on first sight it registers BOTH the real flush expiry and a
-    later decoy, verifies both via ``listTimers`` (ordering not
-    assumed), then ``deleteTimer``s the decoy — so exactly one flush
-    can ever fire. ``init`` additionally exercises ``deleteIfExists``
-    (the drop-the-state-VARIABLE leg — only legal while the handle is
-    in CREATED state, i.e. the schema-evolution cleanup hook, NOT a
-    per-key clear): it declares a scratch ValueState and immediately
-    drops it; a broken delete fails every query start. A leaked decoy
-    would double-emit (the suppression marker is set by then, but the
-    test also pins the fired_at_ms of the single row to the REAL
-    expiry)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        super().init(handle)
-        handle.getValueState("scratch", "s long")
-        handle.deleteIfExists("scratch")
-
-    def handleInputRows(
-        self, key, rows, timerValues
-    ) -> Iterator[pd.DataFrame]:
-        first_sight = (
-            not self._flushed.exists() and not self._tot.exists()
-        )
-        out = super().handleInputRows(key, rows, timerValues)
-        if first_sight and not self._flushed.exists():
-            # super() registered the real expiry; add + verify + drop
-            # the decoy through the management legs
-            self._handle.registerTimer(TIMER_DECOY_AT_MS)
-            expiries = set(self._handle.listTimers())
-            if expiries != {TIMER_FLUSH_AT_MS, TIMER_DECOY_AT_MS}:
-                raise AssertionError(
-                    f"listTimers returned {sorted(expiries)}"
-                )
-            self._handle.deleteTimer(TIMER_DECOY_AT_MS)
-            remaining = set(self._handle.listTimers())
-            if remaining != {TIMER_FLUSH_AT_MS}:
-                raise AssertionError(
-                    f"deleteTimer left {sorted(remaining)}"
-                )
-        return out
-
-
-def tws_timer_flush_juggling(events: DataFrame) -> DataFrame:
-    """``tws_timer_flush_totals`` through the timer-juggling processor
-    (listTimers / deleteTimer / deleteIfExists legs)."""
-    _ensure_worker_protobuf(events)
-    scaled = events.withWatermark("ts", "0 seconds").select(
-        "ts",
-        "user_id",
-        F.round(F.col("value") * 1_000_000).cast("long").alias("v_micros"),
-    )
-    return scaled.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TimerJugglingProcessor(),
-        outputStructType=TIMER_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="EventTime",
-    )

@@ -677,127 +677,69 @@ def test_tws_timer_flush_multi_batch_single_emit(spark, tmp_path):
         assert r["n_events"] >= 2  # at least the first file's rows
 
 
-@pytest.mark.skipif(
-    not _has_protobuf(), reason="TWS execution needs the protobuf package"
-)
-def test_tws_ttl_value_state(spark, sf_dir):
-    """The ttlDurationMs leg of the typed-state protocol executes end
-    to end (TTL config message + expiry-stamped state encoding): with
-    a TTL far longer than the bounded run, the totals equal the batch
-    aggregate exactly. TTL EXPIRY is wall-clock and deliberately
-    outside the exact-oracle surface (r14)."""
-    from pyspark.sql import functions as SF
-
+def test_stream_checkpoint_restart_recovers_state(spark, sf_dir, tmp_path):
+    """Exactly-once across restart: aggregate two slices of events,
+    stop, land a third slice, restart from the SAME checkpoint — the
+    restarted query must process only the new file (offset log) and
+    its complete-mode output must equal the batch aggregate over all
+    three slices (state store recovery), not double-count the old ones."""
     from lms_erp_data_integration_spark.catalog import Catalog
-    from lms_erp_data_integration_spark.plans.streaming_queries import (
-        _rocksdb_provider,
-    )
-    from lms_erp_data_integration_spark.streaming.tws import (
-        tws_running_user_totals_ttl,
-    )
-    from lms_erp_data_integration_spark.streaming.windows import (
-        events_stream,
-    )
 
-    ev = Catalog(spark, sf_dir).events
-    want = {
-        r["user_id"]: (r["n"], r["t"])
-        for r in ev.groupBy("user_id")
-        .agg(
-            SF.count(SF.lit(1)).alias("n"),
-            SF.sum(
-                SF.round(SF.col("value") * 1_000_000).cast("long")
-            ).alias("t"),
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    ev = Catalog(spark, sf_dir).events.select("event_id", "event_type")
+    for sl in (0, 1):
+        ev.where(F.col("event_id") % 3 == sl).repartition(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    def start(name):
+        stream = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-        .collect()
-    }
-    # TTL requires timeMode=ProcessingTime, under which Spark keeps
-    # scheduling state-CLEANUP batches even with no new data — so
-    # processAllAvailable() never returns and the run_to_memory_sink
-    # helper cannot drive this query. Poll the sink for the expected
-    # per-user rows instead, then stop the query explicitly.
-    import time as _time
-
-    with _rocksdb_provider(spark):
-        q = (
-            tws_running_user_totals_ttl(events_stream(spark, sf_dir))
-            .writeStream.outputMode("update")
+        return (
+            stream.writeStream.outputMode("complete")
             .format("memory")
-            .queryName("tws_ttl_test")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
             .start()
         )
-        try:
-            deadline = _time.time() + 120
-            got = {}
-            while _time.time() < deadline:
-                got = {
-                    r["user_id"]: (r["n_events"], r["total_value_micros"])
-                    for r in spark.sql(
-                        "SELECT user_id, "
-                        "max(named_struct('n', n_events, "
-                        "'t', total_value_micros)).n AS n_events, "
-                        "max(named_struct('n', n_events, "
-                        "'t', total_value_micros)).t AS total_value_micros "
-                        "FROM tws_ttl_test GROUP BY user_id"
-                    ).collect()
-                }
-                if got == want:
-                    break
-                _time.sleep(2)
-        finally:
-            q.stop()
-    assert got == want and len(got) > 0
 
-
-@pytest.mark.skipif(
-    not _has_protobuf(), reason="TWS execution needs the protobuf package"
-)
-def test_tws_timer_management_legs(spark, sf_dir):
-    """listTimers / deleteTimer / deleteIfExists execute end to end
-    (r14): the juggling processor registers a decoy expiry alongside
-    the real one, asserts listTimers sees both, deletes the decoy,
-    asserts only the real one remains (AssertionErrors inside the
-    worker fail the query) — and the output is exactly the
-    timer-flush contract: one row per user, fired at the REAL expiry,
-    totals equal to the batch aggregate."""
-    from pyspark.sql import functions as SF
-
-    from lms_erp_data_integration_spark.catalog import Catalog
-    from lms_erp_data_integration_spark.plans.streaming_queries import (
-        _rocksdb_provider,
-    )
-    from lms_erp_data_integration_spark.streaming.tws import (
-        TIMER_FLUSH_AT_MS,
-        tws_timer_flush_juggling,
-    )
-    from lms_erp_data_integration_spark.streaming.windows import (
-        events_stream,
-        run_to_memory_sink,
-    )
-
-    with _rocksdb_provider(spark):
-        out = run_to_memory_sink(
-            tws_timer_flush_juggling(events_stream(spark, sf_dir)),
-            "tws_juggle_test",
-            mode="append",
-        )
-    rows = out.collect()
-    assert all(r["fired_at_ms"] == TIMER_FLUSH_AT_MS for r in rows)
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value_micros"])
-        for r in rows
+    q1 = start("ckpt_run1")
+    q1.awaitTermination(120)
+    two_slices = {
+        r["event_type"]: r["n"] for r in spark.sql(
+            "SELECT * FROM ckpt_run1"
+        ).collect()
     }
-    assert len(got) == len(rows)  # exactly one flush per user
-    ev = Catalog(spark, sf_dir).events
+
+    ev.where(F.col("event_id") % 3 == 2).repartition(1).write.mode(
+        "append"
+    ).parquet(src)
+    q2 = start("ckpt_run2")
+    q2.awaitTermination(120)
+    got = {
+        r["event_type"]: r["n"] for r in spark.sql(
+            "SELECT * FROM ckpt_run2"
+        ).collect()
+    }
     want = {
-        r["user_id"]: (r["n"], r["t"])
-        for r in ev.groupBy("user_id")
-        .agg(
-            SF.count(SF.lit(1)).alias("n"),
-            SF.sum(
-                SF.round(SF.col("value") * 1_000_000).cast("long")
-            ).alias("t"),
-        )
-        .collect()
+        r["event_type"]: r["n"]
+        for r in ev.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n")
+        ).collect()
     }
     assert got == want
+    # and the first run really did hold only the two-slice state
+    part = {
+        r["event_type"]: r["n"]
+        for r in ev.where(F.col("event_id") % 3 != 2)
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert two_slices == part
