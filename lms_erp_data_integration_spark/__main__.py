@@ -15,7 +15,10 @@ courses sections enrollments``) from ``ERP_DIR/<name>.parquet`` (or
 raw provisioning-report directory (``RAW_DIR/<entity>.parquet|csv`` —
 the reference's E2 step) behind an always-on DQ gate, computes the
 seven diff updates, applies them in FK order through the CSV sink
-under ``OUT_DIR``, and prints the per-entity run report.
+under ``OUT_DIR``, and prints the per-entity run report. With
+``--raw`` the diffs compare against the reports the gate just
+admitted, without reading the mirrors back; without it they compare
+against the mirrors under ``MIRROR_DIR``.
 
 Every input is read with a declared schema (``sources.schemas``)
 through ``sources.declared``, so no read runs a schema-inference job.
@@ -24,9 +27,12 @@ A file that lacks a declared column, or a parquet file that has it
 with a type Spark cannot read into the declared one, fails the night
 before anything is written; a CSV value that does not parse as its
 declared type fails the read.
-The sink stages the seven updates concurrently under
-``OUT_DIR/_staging`` and then publishes each into ``OUT_DIR/<name>``
-in FK order.
+The update plans are built while the gates run. Then one wave writes
+the admitted mirrors and stages the seven updates under
+``OUT_DIR/_staging``, all concurrently; only when every write of the
+wave succeeded is each update published into ``OUT_DIR/<name>``, in
+FK order. Otherwise ``_staging`` is discarded, nothing is published,
+and the night fails.
 """
 
 from __future__ import annotations
@@ -99,9 +105,7 @@ def _cmd_sync(args) -> int:
         if df is not None
     }
     engine = SyncEngine(spark, erp, args.mirror, term=args.term)
-    if raw:
-        engine.update_mirror_tables(raw)
-    report = engine.run(csv_sink(args.out))
+    report = engine.run(csv_sink(args.out), raw)
     report.show(100, truncate=False)
     return 0
 

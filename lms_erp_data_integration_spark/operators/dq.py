@@ -134,7 +134,8 @@ def enforce(df: DataFrame, checks: Sequence[Check], label: str) -> None:
     failed = [
         (r["check_name"], int(r["violations"]))
         for r in dq_report(df, checks).collect()
-        if not r["passed"]
+        # a row check's sum over an empty frame is NULL: no violation
+        if r["violations"]
     ]
     if failed:
         raise DQGateError(label, failed)

@@ -9,21 +9,25 @@ Lifecycle parity (SURVEY.md section 3):
   lookup (F4, ``src/canvas.py:19-27``).
 - E2 mirror refresh: raw report frames -> CleanSpec pipelines ->
   partitioned overwrite mirrors (``src/canvas.py:55-104`` +
-  ``src/jenzabar.py:31-47``). Admission is all-or-nothing across
-  entities: all DQ gates pass before any mirror is written. The gates
-  always run, since the reports come from outside the program; they
-  overlap with each other, and then the writes do.
+  ``src/jenzabar.py:31-47``). Admission (:meth:`SyncEngine.admit`) is
+  all-or-nothing across entities: all DQ gates pass before any mirror
+  is written. The gates always run, since the reports come from
+  outside the program, and they overlap with each other.
 - E3 diff & apply: the seven update queries as broadcast anti-joins
   over ERP truth vs mirrors (``src/jenzabar.py:50-80``), applied in FK
   order with an engine-side run report (``src/canvas.py:107-162``).
-  The four mirror reads overlap and run no schema-inference job: they
-  go through ``sources.declared`` with
-  ``sources.schemas.MIRROR_SCHEMAS``. A two-phase CSV sink
-  (``runner.FileSink``) writes all seven updates concurrently to a
-  staging area, then publishes them in FK order, so FK order is the
-  order in which the files become visible. Each staging write also
-  observes its update's change counts, and the report is built from
-  them without running a Spark job.
+  The reference reads its mirrors back because its diff runs in
+  another process. Here a night with raw reports diffs against the
+  frames it just admitted, and builds the seven plans while their
+  gates run. Only a mirror with no report that night is read back,
+  through ``sources.declared`` with ``sources.schemas.MIRROR_SCHEMAS``,
+  so no read runs a schema-inference job. Then one wave runs the
+  mirror writes and a two-phase CSV sink's (``runner.FileSink``)
+  staging writes of all seven updates concurrently. The updates are
+  published in FK order, so FK order is the order in which the files
+  become visible, and only if every write of the wave succeeded. Each
+  staging write also observes its update's change counts, and the
+  report is built from them without running a Spark job.
 
 Overlapped legs run on the shared ``concurrency.run_legs`` pool. A
 night's Spark jobs are small, so their cost is mostly fixed driver
@@ -40,6 +44,7 @@ responses.
 from __future__ import annotations
 
 import datetime as dt
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -125,18 +130,28 @@ class SyncEngine:
         self.mirror_path = mirror_path
         term_id = resolve_term(erp["reg_config"], term)
         self.params = RunParams(term_id, run_date or dt.date.today())
+        self._admitted: dict[str, DataFrame] = {}
+        # built once: a night slices eight frames to its term
+        self._in_term = (F.col("yr_cde") == self.params.yr_cde) & (
+            F.col("trm_cde") == self.params.trm_cde
+        )
 
     # ------------------------------------------------------------- E2
-    def update_mirror_tables(self, raw_reports: dict[str, DataFrame]) -> None:
-        """Clean each raw provisioning-report frame, admission-gate all
-        of them against :func:`mirror_checks`, then overwrite their
-        mirrors (``integrator.py:40-50``).
+    def admit(
+        self,
+        raw_reports: Mapping[str, DataFrame],
+        *beside: Callable[[], object],
+    ) -> dict[str, DataFrame]:
+        """Clean each raw provisioning-report frame and admission-gate
+        all of them against :func:`mirror_checks`; returns the cleaned
+        frames, which :meth:`mirror` answers with from then on.
 
-        Admission is all-or-nothing across entities: every gate runs
-        before any mirror is written, so a
-        :class:`~..operators.dq.DQGateError` on one entity leaves every
-        mirror on its previous snapshot. The gates overlap as legs of
-        one ``run_legs`` call, and so do the writes."""
+        Admission is all-or-nothing across entities: the gates run as
+        legs of one ``run_legs`` call, and a
+        :class:`~..operators.dq.DQGateError` on any entity admits none
+        of them. Each ``beside`` leg runs in that call too, for its
+        effect, with :meth:`mirror` already answering from the frames
+        under admission; it must start no ``run_legs`` call."""
         from ..concurrency import run_legs
 
         cleaned = {
@@ -144,30 +159,56 @@ class SyncEngine:
             for entity, raw in raw_reports.items()
         }
         checks = mirror_checks()
-        run_legs(*(
-            lambda e=e, df=df: dq.enforce(df, checks.get(e, []), label=e)
-            for e, df in cleaned.items()
-        ))
-        run_legs(*(
-            lambda e=e, df=df: write_mirror(df, e, self.mirror_path)
-            for e, df in cleaned.items()
-        ))
+        before, self._admitted = self._admitted, {**self._admitted, **cleaned}
+        try:
+            run_legs(
+                *(
+                    lambda e=e, df=df: dq.enforce(df, checks.get(e, []), label=e)
+                    for e, df in cleaned.items()
+                ),
+                *beside,
+            )
+        except BaseException:
+            self._admitted = before
+            raise
+        return cleaned
+
+    def update_mirror_tables(self, raw_reports: Mapping[str, DataFrame]) -> None:
+        """:meth:`admit` the raw reports, then overwrite their mirrors
+        (``integrator.py:40-50``), the writes as legs of one
+        ``run_legs`` call. A failed gate writes no mirror."""
+        from ..concurrency import run_legs
+
+        run_legs(*self._mirror_writes(self.admit(raw_reports)))
+
+    def _mirror_writes(
+        self, admitted: Mapping[str, DataFrame]
+    ) -> list[Callable[[], str]]:
+        """One :func:`write_mirror` leg per admitted entity, each
+        replacing the run's term even when it has no row for it."""
+        term = (self.params.yr_cde, self.params.trm_cde)
+        return [
+            lambda e=e, df=df: write_mirror(df, e, self.mirror_path, term=term)
+            for e, df in admitted.items()
+        ]
 
     def mirror(self, entity: str) -> DataFrame:
-        df = read_declared_parquet(
-            self.spark,
-            mirror_table_path(self.mirror_path, entity),
-            MIRROR_SCHEMAS[entity],
-        )
+        """The ``entity`` mirror the diffs compare against, sliced to
+        the run's term: the frame this engine admitted for it, else the
+        mirror table read back."""
+        df = self._admitted.get(entity)
+        if df is None:
+            df = read_declared_parquet(
+                self.spark,
+                mirror_table_path(self.mirror_path, entity),
+                MIRROR_SCHEMAS[entity],
+            )
         if "yr_cde" in df.columns:
             df = self._term_slice(df)
         return df
 
     def _term_slice(self, df: DataFrame) -> DataFrame:
-        return df.where(
-            (F.col("yr_cde") == self.params.yr_cde)
-            & (F.col("trm_cde") == self.params.trm_cde)
-        )
+        return df.where(self._in_term)
 
     # ------------------------------------------------------------- E3
     def build_updates(self) -> dict[str, DataFrame]:
@@ -176,14 +217,13 @@ class SyncEngine:
         five diffs of ERP truth against the mirrors, and the two CTL
         library updates projected 1:1 from the courses and sections
         diffs."""
-        from ..concurrency import run_legs
-
         p = self.params
-        # Each mirror read checks its footer and lists its files on the
-        # driver; the four reads are independent, so they overlap as
-        # run_legs legs.
-        users_m, courses_m, sections_m, enrollments_m = run_legs(
-            *(lambda e=e: self.mirror(e) for e in MIRROR_ENTITIES)
+        # Runs no Spark job. On a --raw night it is a leg beside the
+        # gates, so the mirrors it still reads are read one by one, and
+        # projections are SQL text: one call into the JVM each, where
+        # a Column costs one per function, literal and alias.
+        users_m, courses_m, sections_m, enrollments_m = map(
+            self.mirror, MIRROR_ENTITIES
         )
         users_mirror = users_m.select(
             F.col("id_num").cast("long").alias("id_num")
@@ -192,12 +232,12 @@ class SyncEngine:
         def missing_users(roster: DataFrame) -> DataFrame:
             return missing_rows(
                 self._term_slice(roster), users_mirror, ["id_num"]
-            ).select(
-                F.col("id_num").alias("user_id"),
+            ).selectExpr(
+                "id_num AS user_id",
                 "login_id",
                 "first_name",
                 "last_name",
-                F.lit("active").alias("status"),
+                "'active' AS status",
             )
 
         courses = missing_rows(
@@ -216,21 +256,21 @@ class SyncEngine:
             self._term_slice(self.erp["sections"]),
             # only SIS-managed mirror rows count as present (canvas.py:79-80)
             sections_m
-            .where(F.col("created_by_sis") == -1)
+            .where("created_by_sis = -1")
             .select("crs_cde", "section_id"),
             ["crs_cde", "section_id"],
-        ).select(
+        ).selectExpr(
             "section_id",
-            F.col("crs_cde").alias("course_id"),
+            "crs_cde AS course_id",
             "name",
-            F.lit("active").alias("status"),
+            "'active' AS status",
         )
 
         enr_keys = ["course_id", "user_id", "role", "section_id"]
         erp_enr = self._term_slice(self.erp["enrollments"]).select(*enr_keys)
         mirror_enr = (
             enrollments_m
-            .where(F.col("created_by_sis") == -1)
+            .where("created_by_sis = -1")
             .select(*enr_keys)
         )
         enrollments = snapshot_diff(erp_enr, mirror_enr, enr_keys)
@@ -241,26 +281,40 @@ class SyncEngine:
             "courses": courses,
             "sections": sections,
             "enrollments": enrollments,
-            "ctl_library_courses": courses.select(
-                F.concat(F.lit("CTL-"), F.col("course_id")).alias("course_id"),
-                F.col("short_name"),
-                F.concat(F.lit("CTL Library "), F.col("long_name")).alias("long_name"),
+            "ctl_library_courses": courses.selectExpr(
+                "concat('CTL-', course_id) AS course_id",
+                "short_name",
+                "concat('CTL Library ', long_name) AS long_name",
                 "term_id",
                 "status",
             ),
-            "ctl_library_sections": sections.select(
-                F.concat(F.lit("CTL-"), F.col("section_id")).alias("section_id"),
-                F.concat(F.lit("CTL-"), F.col("course_id")).alias("course_id"),
+            "ctl_library_sections": sections.selectExpr(
+                "concat('CTL-', section_id) AS section_id",
+                "concat('CTL-', course_id) AS course_id",
                 "name",
                 "status",
             ),
         }
 
-    def run(self, sink: Sink) -> DataFrame:
-        """Apply the seven updates in FK order and return the report
-        of the change counts their writes observed
+    def run(
+        self, sink: Sink, raw_reports: Mapping[str, DataFrame] | None = None
+    ) -> DataFrame:
+        """One night: :meth:`admit` the raw reports, if any, building
+        the seven update plans while their gates run; then write the
+        admitted mirrors and stage the updates in one wave, and publish
+        the updates in FK order (:meth:`~.runner.SyncPipeline.apply`).
+        Returns the report of the change counts their writes observed
         (:meth:`~.runner.SyncPipeline.report`): the rows and types of
         :func:`~.runner.run_report`, shown without a Spark job."""
         pipe = SyncPipeline(sink)
-        pipe.apply(self.build_updates())
+
+        def plan() -> None:
+            pipe.observe(self.build_updates())
+
+        admitted = {}
+        if raw_reports:
+            admitted = self.admit(raw_reports, plan)
+        else:
+            plan()
+        pipe.apply(beside=self._mirror_writes(admitted))
         return pipe.report()

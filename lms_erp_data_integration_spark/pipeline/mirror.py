@@ -3,22 +3,25 @@
 overwrite.
 
 Parity kept: the entity allowlist raising ``NameError`` on unknown
-names (``src/jenzabar.py:35-36,42-43``) and the derived table-name
-convention (``src/jenzabar.py:40``). Upgrades: snapshot overwrite is
-atomic per partition (dynamic partition overwrite) instead of
-DELETE-then-INSERT, and mirrors are laid out ``partitionBy(yr_cde,
-trm_cde)`` so the per-term diff queries get partition pruning — the
-100 TB answer to the reference's ``WHERE yr_cde=? AND trm_cde=?``
-parameterization. :func:`write_mirror` is the only mirror writer.
+names (``src/jenzabar.py:35-36,42-43``), the derived table-name
+convention (``src/jenzabar.py:40``), and the truncate: a refresh
+with no row for its term empties that term. Upgrades: snapshot
+overwrite is atomic per partition (dynamic partition overwrite)
+instead of DELETE-then-INSERT, and mirrors are laid out
+``partitionBy(yr_cde, trm_cde)`` so the per-term diff queries get
+partition pruning — the 100 TB answer to the reference's
+``WHERE yr_cde=? AND trm_cde=?`` parameterization.
+:func:`write_mirror` is the only mirror writer.
 
-A night reads its mirrors back through ``sources.declared``, with the
-schemas of ``sources.schemas``; :func:`read_mirror` infers, for
-mirrors of any shape.
+A night reads back only the mirrors it has no raw report for, through
+``sources.declared``, with the schemas of ``sources.schemas``;
+:func:`read_mirror` infers, for mirrors of any shape.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 MIRROR_ENTITIES = ("users", "courses", "sections", "enrollments")
 TERM_COLS = ("yr_cde", "trm_cde")
@@ -38,18 +41,43 @@ def mirror_table_path(base_path: str, entity: str) -> str:
     return f"{base_path.rstrip('/')}/{mirror_table_name(entity)}"
 
 
-def write_mirror(df: DataFrame, entity: str, base_path: str) -> str:
-    """Snapshot-overwrite one mirror table; returns its path."""
+def write_mirror(
+    df: DataFrame,
+    entity: str,
+    base_path: str,
+    term: tuple[str, str] | None = None,
+) -> str:
+    """Snapshot-overwrite one mirror table; returns its path.
+
+    A mirror with ``yr_cde``/``trm_cde`` columns is overwritten per
+    term partition: only the terms ``df`` has rows for are replaced,
+    so refreshing one term leaves the others. ``term``, a
+    ``(yr_cde, trm_cde)`` pair, is replaced even when ``df`` has no row
+    for it: the write observes that term's row count, and when it is 0
+    the partition is overwritten by an empty, schema-only file."""
     path = mirror_table_path(base_path, entity)
-    writer = df.write.mode("overwrite")
-    if all(c in df.columns for c in TERM_COLS):
-        # dynamic mode: only the (yr_cde, trm_cde) partitions present in
-        # df are replaced — refreshing one term must not wipe the others.
-        # Set per-writer so the semantics hold on any session.
-        writer = writer.partitionBy(*TERM_COLS).option(
-            "partitionOverwriteMode", "dynamic"
+    if not all(c in df.columns for c in TERM_COLS):
+        df.write.mode("overwrite").parquet(path)
+        return path
+    observed, in_term = df, None
+    if term is not None:
+        in_term = Observation(f"mirror_{entity}")
+        yr, trm = term
+        observed = df.observe(
+            in_term,
+            F.count(
+                F.when((F.col("yr_cde") == yr) & (F.col("trm_cde") == trm), 1)
+            ).alias("rows"),
         )
-    writer.parquet(path)
+    # Dynamic mode, set per writer so the semantics hold on any
+    # session: a partition with no row in df is left as it was.
+    observed.write.mode("overwrite").partitionBy(*TERM_COLS).option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
+    if in_term is not None and not in_term.get["rows"]:
+        df.where(F.lit(False)).drop(*TERM_COLS).write.mode("overwrite").parquet(
+            f"{path}/yr_cde={yr}/trm_cde={trm}"
+        )
     return path
 
 

@@ -9,18 +9,19 @@ per-entity change statistics into a text report
 
 Here each sink call consumes a DataFrame, made in FK order. The
 two-phase CSV sink (:class:`FileSink`) splits each call: all updates are
-staged concurrently, then published in FK order, so FK order is the
-order in which they become visible. As in the reference, the counts
-come from the apply itself: each update carries an ``Observation`` of
-:func:`change_counts` that rides the write staging it, and the run
-report is built from those counts without a further Spark job. Per
-entity it holds the row count and, where a status column exists, the
-add/delete split.
+staged concurrently, together with any other writes of the same wave
+(a sync night's mirror writes), then published in FK order, so FK
+order is the order in which they become visible. As in the
+reference, the counts come from the apply itself: each update
+carries an ``Observation`` of :func:`change_counts` that rides the
+write staging it, and the run report is built from those counts
+without a further Spark job. Per entity it holds the row count and,
+where a status column exists, the add/delete split.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Mapping
+from collections.abc import Callable, Mapping, Sequence
 from typing import Protocol
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -59,12 +60,15 @@ def change_counts(df: DataFrame) -> list[Column]:
     """The change-count aggregates of one update: ``n_rows`` and, by
     ``status`` (``active`` when the frame has no status column),
     ``n_active`` and ``n_deleted``. Usable in ``agg`` and ``observe``
-    alike; the sums are NULL over an empty update, as in SQL."""
-    status = F.col("status") if "status" in df.columns else F.lit("active")
+    alike; the sums are NULL over an empty update, as in SQL. Each is
+    parsed from SQL text, one call into the JVM instead of a dozen: a
+    sync night builds them while its gates run, where every call
+    waits on the gates' own."""
+    status = "status" if "status" in df.columns else "'active'"
     return [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(status == "active", 1).otherwise(0)).alias("n_active"),
-        F.sum(F.when(status == "deleted", 1).otherwise(0)).alias("n_deleted"),
+        F.expr("count(1) AS n_rows"),
+        F.expr(f"sum(CASE WHEN {status} = 'active' THEN 1 ELSE 0 END) AS n_active"),
+        F.expr(f"sum(CASE WHEN {status} = 'deleted' THEN 1 ELSE 0 END) AS n_deleted"),
     ]
 
 
@@ -124,8 +128,10 @@ class SyncPipeline:
     (``src/canvas.py:118-133``); the engine core stays self-contained
     (tests use a recording sink; a CSV sink gives file parity).
 
-    ``apply`` instruments every update with a Spark ``Observation`` of
-    :func:`change_counts`, so the counts ride the sink's own write
+    ``observe`` instruments every update with a Spark ``Observation``
+    of :func:`change_counts`, without a job, so a night can do it
+    while its gates run; ``apply`` does it when given the updates
+    itself. The counts ride the sink's own write
     instead of the extra aggregation pass per entity that
     :func:`run_report` costs. The contract for the sink: each call
     (or, for a :class:`StagedSink`, each ``stage``) runs exactly one
@@ -133,47 +139,62 @@ class SyncPipeline:
     waits for those observations, and an ``Observation`` whose frame
     never ran an action blocks forever.
 
-    Measured on the ``sync_nightly`` benchmark (4 cores) against
-    checkpointing the five diffs before the apply, with the counts
-    observed on the checkpoint jobs: a traced seed-7 night runs 29
-    Spark jobs instead of 32, for no gain in time: ``pass_s`` median
-    pair ratio 1.05 in two sets of 10 interleaved pairs (seeds
-    1001-1010: 2.50 -> 2.69 s, 5/10 wins, parent IQR 2.33-2.99 s;
-    seeds 2001-2010: 2.18 -> 2.27 s, 2/10 wins, parent IQR
-    2.04-2.58 s)."""
+    Measured on the ``sync_nightly`` benchmark (4 cores, 10
+    interleaved pairs, ``pass_s`` median pair ratio): observing the
+    counts on the staging writes instead of on checkpoint jobs ran 29
+    Spark jobs a night instead of 32, for no gain in time (1.05 in two
+    sets). Observing them while the gates run, and staging in one wave
+    with the mirror writes, read 0.83 (2.35 -> 1.90 s, 9/10 wins,
+    parent IQR 2.25-2.52 s) at the same 29 jobs."""
 
     def __init__(self, sink: Sink):
         self.sink = sink
         self._observations: dict[str, Observation] = {}
+        self._frames: dict[str, DataFrame] = {}
         self._spark: SparkSession | None = None
 
-    def apply(self, updates: Mapping[str, DataFrame]) -> list[str]:
-        """Apply updates in dependency order; returns the order used.
-
-        A sink with a ``stage`` method (:class:`StagedSink`) first
-        stages every update, as legs of one ``run_legs`` call, and is
-        then called in FK order to publish them. If any staging fails,
-        the sink discards what was staged once every leg has finished,
-        nothing is published, and the first failure is raised.
-
-        Unknown update names are rejected (mirrors the strictness of
-        the reference's mirror-table allowlist)."""
+    def observe(self, updates: Mapping[str, DataFrame]) -> None:
+        """Put the updates in FK order and an ``Observation`` of
+        :func:`change_counts` on each, for the next :meth:`apply`; runs
+        no Spark job. Unknown update names are rejected (mirrors the
+        strictness of the reference's mirror-table allowlist)."""
         unknown = set(updates) - set(UPDATE_ORDER)
         if unknown:
             raise NameError(f"unknown update entities: {sorted(unknown)}")
-        self._observations = {}
-        frames: dict[str, DataFrame] = {}
+        self._observations, self._frames = {}, {}
         for name in UPDATE_ORDER:
             if name in updates:
                 df = updates[name]
                 obs = self._observations[name] = Observation(f"sync_{name}")
-                frames[name] = df.observe(obs, *change_counts(df))
+                self._frames[name] = df.observe(obs, *change_counts(df))
                 self._spark = df.sparkSession
+
+    def apply(
+        self,
+        updates: Mapping[str, DataFrame] | None = None,
+        beside: Sequence[Callable[[], object]] = (),
+    ) -> list[str]:
+        """Apply ``updates`` in dependency order, or, when None, those
+        last given to :meth:`observe`; returns the order used.
+
+        A sink with a ``stage`` method (:class:`StagedSink`) first
+        stages every update, as legs of one ``run_legs`` call that also
+        runs the ``beside`` legs, and is then called in FK order to
+        publish them. If any of those legs fails, the sink discards
+        what was staged once every leg has finished, nothing is
+        published, and the first failure is raised. With a plain sink
+        the ``beside`` legs run first, and then the sink calls."""
+        if updates is not None:
+            self.observe(updates)
         if hasattr(self.sink, "stage"):
-            self._stage(frames)
-        for name, df in frames.items():
+            self._stage(beside)
+        elif beside:
+            from ..concurrency import run_legs
+
+            run_legs(*beside)
+        for name, df in self._frames.items():
             self.sink(name, df)
-        return list(frames)
+        return list(self._frames)
 
     def report(self) -> DataFrame:
         """:func:`observed_report` over the counts the last ``apply``
@@ -183,21 +204,26 @@ class SyncPipeline:
             {name: obs.get for name, obs in self._observations.items()},
         )
 
-    def _stage(self, frames: Mapping[str, DataFrame]) -> None:
+    def _stage(self, beside: Sequence[Callable[[], object]]) -> None:
         from ..concurrency import run_legs
 
-        def leg(name: str, df: DataFrame) -> Exception | None:
+        def leg(fn: Callable[[], object]) -> Exception | None:
             try:
-                self.sink.stage(name, df)
+                fn()
             except Exception as e:  # noqa: BLE001 - raised after every leg
                 return e
             return None
 
+        stages = [
+            lambda name=name, df=df: self.sink.stage(name, df)
+            for name, df in self._frames.items()
+        ]
+        # beside legs first: a sync night's are its mirror writes, whose
+        # plans are smaller than the diffs'
         failures = [
             e
             for e in run_legs(*(
-                lambda name=name, df=df: leg(name, df)
-                for name, df in frames.items()
+                lambda fn=fn: leg(fn) for fn in (*beside, *stages)
             ))
             if e is not None
         ]

@@ -275,6 +275,66 @@ def test_cli_sync_dq_gate_fails_the_night_before_writing(spark, tmp_path):
     assert not out_dir.exists()
 
 
+def _published_csvs(out_dir):
+    """Each published update's CSV header and sorted rows."""
+    import glob
+
+    from lms_erp_data_integration_spark.pipeline.runner import UPDATE_ORDER
+
+    csvs = {}
+    for name in UPDATE_ORDER:
+        (path,) = glob.glob(str(out_dir / name / "*.csv"))
+        with open(path) as f:
+            header, *rows = f.read().splitlines()
+        csvs[name] = (header, sorted(rows))
+    return csvs
+
+
+@pytest.mark.parametrize("empty_courses", [False, True])
+def test_cli_sync_diffs_the_admitted_reports_as_a_read_back_would(
+    spark, tmp_path, empty_courses
+):
+    """A ``--raw`` night diffs against the reports it just admitted,
+    without reading the mirrors back. A night on the same ERP tables
+    without ``--raw``, against the mirrors the first night wrote,
+    publishes the same seven CSVs. With an empty courses report after
+    a night that mirrored MATH101, both nights see no current-term
+    courses mirror: the refresh emptied that partition."""
+    erp_dir, raw_dir = _write_sync_inputs(spark, tmp_path)
+    mirror_dir = tmp_path / "mirror"
+    if empty_courses:
+        _run_sync(erp_dir, raw_dir, mirror_dir, tmp_path / "out0")
+        _rewrite(spark, raw_dir / "courses.parquet", lambda df: df.limit(0))
+    _run_sync(erp_dir, raw_dir, mirror_dir, tmp_path / "admitted")
+    _run_sync(erp_dir, None, mirror_dir, tmp_path / "read_back")
+    admitted = _published_csvs(tmp_path / "admitted")
+    assert admitted == _published_csvs(tmp_path / "read_back")
+    courses = {row.split(",")[0] for row in admitted["courses"][1]}
+    assert courses == ({"MATH101", "CS200"} if empty_courses else {"CS200"})
+
+
+def test_cli_sync_failed_mirror_write_publishes_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """A mirror write that fails in the night's wave fails the night:
+    no update is published and no ``_staging`` is left behind."""
+    from lms_erp_data_integration_spark.pipeline import engine
+
+    write_mirror = engine.write_mirror
+
+    def failing(df, entity, base_path, **kwargs):
+        if entity == "sections":
+            raise OSError("sections mirror unwritable")
+        return write_mirror(df, entity, base_path, **kwargs)
+
+    monkeypatch.setattr(engine, "write_mirror", failing)
+    erp_dir, raw_dir = _write_sync_inputs(spark, tmp_path)
+    out_dir = tmp_path / "out"
+    with pytest.raises(OSError, match="sections mirror unwritable"):
+        _run_sync(erp_dir, raw_dir, tmp_path / "mirror", out_dir)
+    assert not out_dir.exists() or not list(out_dir.iterdir())
+
+
 def test_cli_sync_reads_csv_tables_and_rejects_a_mismatched_header(
     spark, tmp_path
 ):

@@ -212,6 +212,20 @@ def test_run_report_on_an_empty_update(engine, spark):
     assert got[1][0][:5] == ("faculty_users", "Account", 0, None, None)
 
 
+def test_update_plans_run_no_job(engine, spark):
+    """Building the seven update plans and their observations runs no
+    Spark job, so a night can build them while its gates run."""
+    from lms_erp_data_integration_spark.pipeline.runner import SyncPipeline
+
+    sc = spark.sparkContext
+    sc.setJobGroup("sync-plan-probe", "build the update plans")
+    try:
+        SyncPipeline(_noop_sink).observe(engine.build_updates())
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("sync-plan-probe") == []
+
+
 def test_mirror_cleaning_contracts(engine):
     users = engine.mirror("users")
     # sdemo row filtered by the cleaning spec (canvas.py:70)
@@ -359,3 +373,15 @@ def test_dq_report_unit(spark):
     # k=2 and k=NULL rows have no dim match
     assert rep["k_fk_dim"]["violations"] == 2
     assert rep["v_positive"]["passed"] is False
+
+
+def test_dq_gate_admits_an_empty_report(spark):
+    """An empty report violates nothing: the gate passes it, although
+    a row check's sum over no rows is NULL."""
+    from lms_erp_data_integration_spark.operators import dq
+    from lms_erp_data_integration_spark.pipeline.engine import mirror_checks
+
+    empty = spark.createDataFrame(
+        [], "crs_cde string, yr_cde string, trm_cde string"
+    )
+    dq.enforce(empty, mirror_checks()["courses"], label="courses")

@@ -96,3 +96,29 @@ def test_legs_called_from_a_thread_without_a_session(spark):
     t.start()
     t.join(60)
     assert not t.is_alive() and out == [[1, 2]]
+
+
+def test_the_pool_runs_a_whole_sync_wave_at_once(monkeypatch):
+    """A sync night's wave, every mirror write and every update
+    staging, is one run_legs call. The shared pool runs all of its
+    legs at once, so legs that wait on each other complete; a narrower
+    pool fails with BrokenBarrierError instead of hanging."""
+    import concurrent.futures as cf
+
+    from lms_erp_data_integration_spark.pipeline.mirror import MIRROR_ENTITIES
+    from lms_erp_data_integration_spark.pipeline.runner import UPDATE_ORDER
+
+    n = len(UPDATE_ORDER) + len(MIRROR_ENTITIES)
+
+    def wave(timeout):
+        barrier = threading.Barrier(n, timeout=timeout)
+        return concurrency.run_legs(*[barrier.wait] * n)
+
+    assert sorted(wave(30)) == list(range(n))
+    narrow = cf.ThreadPoolExecutor(max_workers=n - 1)
+    monkeypatch.setattr(concurrency, "_pool", narrow)
+    try:
+        with pytest.raises(threading.BrokenBarrierError):
+            wave(1)
+    finally:
+        narrow.shutdown()

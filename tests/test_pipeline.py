@@ -55,6 +55,23 @@ def test_mirror_overwrite_is_per_partition(spark, tmp_path):
     assert rows == {("C9", "1S"), ("C2", "2S")}
 
 
+def test_mirror_refresh_with_no_row_for_its_term_empties_it(spark, tmp_path):
+    """A refresh of term 21/1S with no row for it empties that
+    partition, as the reference's truncate does; 21/2S is untouched."""
+    schema = "crs_cde string, yr_cde string, trm_cde string"
+    write_mirror(
+        spark.createDataFrame([("C1", "21", "1S"), ("C2", "21", "2S")], schema),
+        "courses",
+        str(tmp_path),
+    )
+    write_mirror(
+        spark.createDataFrame([], schema), "courses", str(tmp_path),
+        term=("21", "1S"),
+    )
+    back = read_mirror(spark, "courses", str(tmp_path))
+    assert {(r.crs_cde, r.trm_cde) for r in back.collect()} == {("C2", "2S")}
+
+
 def test_pipeline_fk_order_and_report(spark):
     users = spark.createDataFrame(
         [(1, "a", "active")], "user_id long, login_id string, status string"
